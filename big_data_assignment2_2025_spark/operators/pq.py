@@ -118,14 +118,6 @@ def pq_lowest_id_codebooks(
     )
 
 
-def _centroid_literal(cents: np.ndarray) -> str:
-    """SQL literal array<array<double>> for one subspace's centroids."""
-    rows = ",".join(
-        "array(" + ",".join(repr(float(x)) for x in c) + ")" for c in cents
-    )
-    return f"array({rows})"
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: np.ndarray,
@@ -179,15 +171,21 @@ def _encode_np(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     ``argmin`` breaks ties to the lowest centroid index exactly like
     ``array_position(dists, array_min(dists))``."""
     m, kc, d_sub = codebooks.shape
-    # precondition made LOUD (r14, ADVICE): the fused query path assumes
-    # clean fixed-length embeddings — np.stack upstream already raises on
-    # null/ragged rows, and a NaN component would argmin differently from
-    # Catalyst's array_min (NaN sorts greatest there) — so reject rather
-    # than silently diverge from pq_encode
+    # precondition made LOUD: the fused query path assumes clean
+    # fixed-length embeddings — np.stack upstream already raises on
+    # ragged rows, a null element arrives here as NaN, and a NaN
+    # component would argmin differently from Catalyst's array_min (NaN
+    # sorts greatest there) — so reject rather than silently diverge
+    # from pq_encode
     if X.ndim != 2 or X.shape[1] != m * d_sub:
         raise ValueError(
             f"pq encode expects dense {m * d_sub}-dim embeddings, got "
             f"shape {X.shape}"
+        )
+    if not np.isfinite(X).all():
+        raise ValueError(
+            "pq encode expects finite embeddings, got a null or non-finite "
+            "element"
         )
     n = X.shape[0]
     codes = np.empty((n, m), dtype=np.int64)

@@ -26,20 +26,11 @@ No reference counterpart; analytics extensions per SURVEY.md §7.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import TARGET_CELL_ROWS, semantic_dedup
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged_dir
 from ..sources.snapshots import SnapshotStore
 
 from .similarity_queries import COSINE_SQL_TEMPLATE as _COSINE
@@ -99,13 +90,8 @@ def _staged_evolution_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     v1 overwrite (3 columns, two thirds of documents), v2 schema-only
     ``add_column('tox_score', 'bigint')``, v3 append (the remaining
     third, carrying the new column). Fingerprint-gated like every derived
-    copy (``bucketed_table`` discipline)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapevo_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    copy (``staged_dir``)."""
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars"
@@ -120,10 +106,8 @@ def _staged_evolution_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             ),
             mode="append",
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapevo", build))
 
 
 def storage_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,12 +179,7 @@ def _staged_partition_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     pre-spec member migrates into partition members, Iceberg's
     rewrite-to-new-spec move). Fingerprint-gated like every derived
     copy."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snappspec_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -217,10 +196,8 @@ def _staged_partition_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             stats_cols=["o_orderkey"],
         )
         store.compact(spark)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snappspec", build))
 
 
 def storage_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,12 +267,7 @@ def _staged_cdf_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     zeroing price to 1.0 for o_orderkey % 5 == 0, deletes for
     % 7 == 0 (minus the upsert keys: a MERGE batch is one row per key).
     Fingerprint-gated like every staged store."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapcdf_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -323,10 +295,8 @@ def _staged_cdf_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             F.lit("delete").alias("_op"),
         )
         store.merge(spark, ups.unionAll(dels), keys=["o_orderkey"])
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapcdf", build))
 
 
 def storage_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:

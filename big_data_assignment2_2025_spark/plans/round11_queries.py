@@ -25,19 +25,10 @@ No reference counterpart; lakehouse extensions per SURVEY.md §7.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged_dir
 from ..sources.snapshots import SnapshotStore
 
 #: the staged-store splits (shared by the Spark and SQL sides)
@@ -63,12 +54,7 @@ def _staged_dv_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     Fingerprint-gated like every staged store; the dir name carries a
     recipe version because the fixture fingerprint can't see
     builder-code changes."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapdv3_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -109,10 +95,8 @@ def _staged_dv_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             {"o_totalprice": F.col("o_totalprice") * 2},
         )
         store.compact_masked(spark, max_masked_fraction=0.15)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapdv3", build))
 
 
 def storage_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,19 +20,10 @@ No reference counterpart; lakehouse extensions per SURVEY.md §7.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged_dir
 from ..sources.snapshots import ConstraintViolationError, SnapshotStore
 
 #: the narrative's splits (shared by the Spark and SQL sides)
@@ -48,12 +39,7 @@ def _staged_constraint_store(
     the landed versions the builder attempts THREE violating writes and
     asserts each refuses without publishing — the gate only ever sees a
     store whose refusal discipline held."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapcons1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -95,10 +81,8 @@ def _staged_constraint_store(
             orders.where(F.col("o_orderkey") % _APP_MOD == 0),
             mode="append",
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapcons1", build))
 
 
 def storage_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,12 +149,7 @@ def _staged_sprawl_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     by key mod), v7 ``delete_where`` (a DV over every member), v8
     ``compact_small`` — all six undersized members bin into one, the
     rewrite materializes their deletion vectors away."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapsprawl2_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -185,10 +164,8 @@ def _staged_sprawl_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             spark, F.col("o_orderpriority") == _SMALL_PRIO
         )
         store.compact_small(spark, target_bytes=1 << 31)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapsprawl2", build))
 
 
 def storage_compact_small(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,12 +232,7 @@ def _staged_default_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     append OMITTING the column (reads NULL: initial default only, write
     defaults deliberately not implied) -> v5 compact (materializes the
     backfill, defaults map empties)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapdef1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -283,10 +255,8 @@ def _staged_default_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             mode="append",
         )
         store.compact(spark)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapdef1", build))
 
 
 def storage_default_column(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,18 +24,11 @@ No reference counterpart; lakehouse extensions per SURVEY.md §7.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import load_table, staged_dir
 from ..sources.snapshots import SnapshotStore
 
 #: the column-mapping narrative's append split (shared Spark/SQL)
@@ -49,12 +42,7 @@ def _staged_mapping_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     builder asserts the refusal paths (rename onto an existing name,
     drop of the last column's guards are unit-tested; here: re-added
     column reads NULL on pre-drop rows)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapcolmap1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -74,10 +62,8 @@ def _staged_mapping_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             .withColumn("o_orderpriority", F.lit("NEW")),
             mode="append",
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapcolmap1", build))
 
 
 def storage_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,12 +140,7 @@ def _staged_identity_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     the column (engine assigns past the watermark) -> v4 update_where
     (post-images keep their ids). The builder asserts the refusal
     paths: explicit identity values and identity assignment refuse."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapident1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -198,10 +179,8 @@ def _staged_identity_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             F.col("o_orderpriority") == _ID_UPD_PRIO,
             {"o_totalprice": F.col("o_totalprice") + F.lit(10.0)},
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapident1", build))
 
 
 def storage_identity_column(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,12 +259,7 @@ def _staged_generated_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     materializes it) -> v3 append OMITTING the column (engine computes)
     -> v4 update_where on a SOURCE column (band recomputes on the
     post-image). The builder asserts explicit values refuse."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapgen1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -316,10 +290,8 @@ def _staged_generated_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             F.col("o_orderpriority") == _GEN_UPD_PRIO,
             {"o_totalprice": F.col("o_totalprice") + F.lit(100000.0)},
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapgen1", build))
 
 
 def storage_generated_column(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -375,12 +347,7 @@ def _staged_skew_merge_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     ``merge(prune=True)`` whose update/delete keys all live in the hot
     member — the builder asserts the prune still bit (exactly the hot
     member rewritten, the four cold members carried verbatim)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapskewmerge1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -430,10 +397,8 @@ def _staged_skew_merge_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             f"skewed pruned merge rewrote {len(doc['rewrote'])} members "
             "(expected exactly the hot one)"
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snapskewmerge1", build))
 
 
 def storage_merge_pruned_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,12 +477,7 @@ def _staged_restore_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     (metadata-only: the append and the update roll back, history stays
     time-travelable) -> v5 append. The builder asserts the restore wrote
     nothing and recorded its target."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snaprestore1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -539,10 +499,8 @@ def _staged_restore_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             orders.where(F.col("o_orderkey") % _RST_POST_MOD == 0),
             mode="append",
         )
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
-    return SnapshotStore(base)
+
+    return SnapshotStore(staged_dir(sf_dir, "snaprestore1", build))
 
 
 def storage_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,20 +564,12 @@ def _staged_clone_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     """Source: v1 overwrite (k%2==0) -> v2 delete_where (k%10==0, a DV
     the clone must inherit) -> SHALLOW CLONE -> the clone appends its
     own batch (k%7==3). Builder asserts zero bytes copied (the clone's
-    data dir holds only its own append)."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    src_base = os.path.join(tempfile.gettempdir(), f"snapclonesrc1_{tag}")
-    dst_base = os.path.join(tempfile.gettempdir(), f"snapclonedst1_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    # the clone references the SOURCE's directories — both must survive
-    # for the cache to be valid (a half-cleared /tmp must rebuild both)
-    if not derived_cache_ok(dst_base, fprint) or not os.path.isdir(
-        os.path.join(src_base, "data")
-    ):
-        for b in (src_base, dst_base):
-            if os.path.exists(b):
-                shutil.rmtree(b)
-        src = SnapshotStore(src_base)
+    data dir holds only its own append). The clone references the
+    source's directories, so both stage under one root (``src/``,
+    ``dst/``) behind one marker."""
+    def build(root: str) -> None:
+        src = SnapshotStore(os.path.join(root, "src"))
+        dst_base = os.path.join(root, "dst")
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
@@ -638,10 +588,9 @@ def _staged_clone_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
             .withColumn("o_orderpriority", F.lit("CLONED")),
             mode="append",
         )
-        with open(os.path.join(dst_base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(dst_base, fprint)
-    return SnapshotStore(dst_base)
+
+    root = staged_dir(sf_dir, "snapclone1", build)
+    return SnapshotStore(os.path.join(root, "dst"))
 
 
 def storage_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:

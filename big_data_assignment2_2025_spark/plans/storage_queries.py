@@ -20,17 +20,11 @@ shuffle-free plan shapes are asserted in ``tests/test_storage.py``.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import (
-    derived_cache_ok,
-    fixture_fingerprint,
-    load_table,
-    mark_derived_cache,
-)
+from ..sources.readers import derived_path, load_table, staged_dir
 
 _N_BUCKETS = 8
 
@@ -66,22 +60,28 @@ def bucketed_table(
     mid-pass). Registration is a metadata-only DDL over the existing
     bucketed files.
     """
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"{table}_bkt{n_buckets}_{tag}"
     # the path must encode the FULL bucket spec, not just the table: the
     # register-without-rewrite branch below declares CLUSTERED BY (key)
     # INTO n_buckets BUCKETS over whatever files sit here, and a caller
     # with a different spec registering the same path would let Spark
     # skip shuffles against mismatched files — silent wrong join results
-    # (ADVICE r12)
-    path = os.path.join(
-        tempfile.gettempdir(), f"bkt_{tag}", f"{table}_{key}_{n_buckets}"
-    )
-    fprint = fixture_fingerprint(sf_dir)
-    if spark.catalog.tableExists(name) and derived_cache_ok(path, fprint):
-        return spark.table(name)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if derived_cache_ok(path, fprint):
+    # (ADVICE r12). The catalog name carries the same fixture tag.
+    name = os.path.basename(derived_path(sf_dir, f"{table}_bkt{n_buckets}"))
+
+    def build(path: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            load_table(spark, sf_dir, table)
+            .write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(n_buckets, key)
+            .sortBy(key)
+            .option("path", path)
+            .saveAsTable(name)
+        )
+
+    path = staged_dir(sf_dir, f"bkt_{table}_{key}_{n_buckets}", build)
+    if not spark.catalog.tableExists(name):
         # data is current — register, never rewrite (see docstring)
         schema = spark.read.parquet(path).schema
         cols = ", ".join(
@@ -92,17 +92,6 @@ def bucketed_table(
             f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
             f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
-        return spark.table(name)
-    (
-        load_table(spark, sf_dir, table)
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    mark_derived_cache(path, fprint)
     return spark.table(name)
 
 
@@ -186,14 +175,12 @@ def partitioned_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     why doc_id-like keys get bucketing (above) instead."""
     from ..sources.sinks import write_partitioned
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"docs_bylang_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(path, fprint):
+    def build(path: str) -> None:
         write_partitioned(
             load_table(spark, sf_dir, "documents"), path, ["lang"]
         )
-        mark_derived_cache(path, fprint)
+
+    path = staged_dir(sf_dir, "docs_bylang", build)
     back = spark.read.parquet(path)
     return (
         back.where(F.col("lang") == "en")
@@ -220,10 +207,7 @@ def _staged_evolving_orders(spark: SparkSession, sf_dir: str) -> str:
     existed; v2 files carry the full schema plus the new column. The
     schema-drift reality of any long-lived 100 TB table; cache is
     fingerprint-gated like every derived copy."""
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    root = os.path.join(tempfile.gettempdir(), f"evolving_{tag}", "orders")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(root, fprint):
+    def build(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         cut = F.lit("1998-01-01").cast("timestamp")
         (
@@ -244,11 +228,8 @@ def _staged_evolving_orders(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(root, "v2"))
         )
-        import pathlib
 
-        pathlib.Path(os.path.join(root, "_SUCCESS")).touch()
-        mark_derived_cache(root, fprint)
-    return root
+    return staged_dir(sf_dir, "evolving", build)
 
 
 def orders_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -305,27 +305,12 @@ def streaming_snapshot_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is batching-invariant by construction. Planning reads
     manifests only (O(new commits), never a table scan): at 100 TB the
     stream costs what the ingest added, not what the table holds."""
-    import os
-    import tempfile
-
-    from ..sources.readers import (
-        derived_cache_ok,
-        fixture_fingerprint,
-        load_table,
-        mark_derived_cache,
-    )
+    from ..sources.readers import load_table, staged_dir
     from ..sources.snapshot_source import SnapshotStreamDataSource
     from ..sources.snapshots import SnapshotStore
     from ..streaming.stream import _drain_to_memory
 
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapsrc_{tag}")
-    fprint = fixture_fingerprint(sf_dir)
-    if not derived_cache_ok(base, fprint):
-        import shutil
-
-        if os.path.exists(base):
-            shutil.rmtree(base)
+    def build(base: str) -> None:
         store = SnapshotStore(base)
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -334,13 +319,8 @@ def streaming_snapshot_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(3):
             store.commit(ev.where(F.col("event_id") % 3 == i), mode="append")
-        # derived_cache_ok requires the _SUCCESS marker a parquet job
-        # writes at the cache root; a snapshot STORE root has none, so
-        # touch it — without this the fingerprint never validates and the
-        # 3-commit store rebuilt on every invocation (ADVICE r11)
-        with open(os.path.join(base, "_SUCCESS"), "w"):
-            pass
-        mark_derived_cache(base, fprint)
+
+    base = staged_dir(sf_dir, "snapsrc", build)
     spark.dataSource.register(SnapshotStreamDataSource)
     stream = spark.readStream.format("snapshotstream").option(
         "path", base

@@ -14,6 +14,12 @@ from the parquet reader instead of CQL partition keys.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,14 +49,11 @@ CORPUS_SCHEMA = T.StructType(
 def fixture_fingerprint(sf_dir: str) -> str:
     """Content-version tag for a fixture directory: sizes + mtimes of every
     ``*.parquet`` entry (recursing one level into directory datasets),
-    hashed. Folded into every derived-data cache marker (``adj_rec_*``,
-    ``docs_bylang_*``, ``bkt_*`` tables) so a fixture regenerated IN PLACE
+    hashed. Folded into every derived-data cache marker (every
+    ``staged_dir`` copy) so a fixture regenerated IN PLACE
     at the same path invalidates the caches instead of silently serving
     stale derived data — the same discipline as ``tools/scale_probe.py``'s
     BUILD_TAG marker."""
-    import hashlib
-    import os
-
     parts = []
     for name in sorted(os.listdir(sf_dir)):
         if not name.endswith(".parquet"):
@@ -73,8 +76,6 @@ def derived_cache_ok(path: str, tag: str) -> bool:
     """True iff a derived-parquet cache at ``path`` was committed
     (``_SUCCESS``) AND was built from the fixture state ``tag`` — stale or
     half-written caches read as invalid and get rebuilt."""
-    import os
-
     try:
         with open(os.path.join(path, _CACHE_MARKER)) as fh:
             return (
@@ -89,10 +90,39 @@ def mark_derived_cache(path: str, tag: str) -> None:
     """Write the fixture tag AFTER the parquet job commits: the marker is
     the cache's commit point, so an interrupted or concurrent writer can at
     worst cause a redundant rebuild, never a stale read."""
-    import os
-
     with open(os.path.join(path, _CACHE_MARKER), "w") as fh:
         fh.write(tag)
+
+
+def derived_path(sf_dir: str, name: str) -> str:
+    """Where the derived copy ``name`` of fixture ``sf_dir`` lives:
+    ``<tmp>/<name>_<tag>``, the tag being the fixture path flattened to
+    one directory name."""
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    return os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
+
+
+def staged_dir(sf_dir: str, name: str, build: Callable[[str], object]) -> str:
+    """Stage the derived copy ``name`` of fixture ``sf_dir`` once and
+    return its directory (``derived_path``).
+
+    A directory whose marker matches the fixture's current fingerprint
+    is reused as is. Anything else (absent, stale, or half-built by an
+    interrupted call) is removed and ``build(path)`` rebuilds it in
+    place. The commit comes last: ``_SUCCESS`` is touched if the build
+    did not leave one, then the fingerprint marker is written, so a
+    build that raises leaves no marker and the next call rebuilds.
+    The rebuild stays in place rather than going to a temp directory
+    and renaming: snapshot clone manifests record their source's
+    absolute path."""
+    path = derived_path(sf_dir, name)
+    fprint = fixture_fingerprint(sf_dir)
+    if not derived_cache_ok(path, fprint):
+        shutil.rmtree(path, ignore_errors=True)
+        build(path)
+        open(os.path.join(path, "_SUCCESS"), "a").close()
+        mark_derived_cache(path, fprint)
+    return path
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

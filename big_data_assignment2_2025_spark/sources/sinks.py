@@ -1,10 +1,8 @@
 """Sinks.
 
-Reference parity (SURVEY.md S4, S5, S8):
+Reference parity (SURVEY.md S4, S8):
 - TSV sink ``df.write.csv(path, sep="\\t")`` (reference ``app/query.py:144``,
   ``app/prepare_data.py:29``)
-- per-document ``.txt`` dump via ``df.foreach`` (reference
-  ``app/prepare_data.py:20-26``) — kept for corpus-dump parity only
 - delete-before-write (reference ``app/search.sh:5``) -> ``mode="overwrite"``
 """
 
@@ -143,29 +141,6 @@ def write_zorder(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def dump_documents(df: DataFrame, out_dir: str) -> None:
-    """One sanitized-named ``.txt`` file per document (reference
-    ``app/prepare_data.py:20-26``). Executor-side side-effect write; not part
-    of the query engine, kept for parity with ``prepare_data``."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    named = df.select(
-        F.regexp_replace(
-            F.concat_ws("_", F.col("doc_id").cast("string"), F.col("doc_title")),
-            r"[^\w\-.]",
-            "_",
-        ).alias("fname"),
-        F.col("text"),
-    )
-
-    def _write(row):
-        with open(os.path.join(out_dir, row["fname"] + ".txt"), "w") as fh:
-            fh.write(row["text"] or "")
-
-    named.foreach(_write)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -115,3 +115,34 @@ def test_case_insensitive_query(index):
     a = {(r.doc_id): r.doc_rank for r in _run(index, "FOOTBALL")}
     b = {(r.doc_id): r.doc_rank for r in _run(index, "football")}
     assert a == b
+
+
+def test_materialized_search_rebuilds_after_fixture_regenerated(spark, tmp_path):
+    """bm25_search_materialized must not serve an index built from an
+    older version of a fixture regenerated in place at the same path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from big_data_assignment2_2025_spark.plans import QUERIES
+    from tests.conftest import SF_SMALL
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMALL, sf, copy_function=shutil.copyfile)
+    sf_dir = str(sf)
+
+    def rows(name):
+        return sorted(tuple(r) for r in QUERIES[name](spark, sf_dir).collect())
+
+    before = rows("bm25_search_materialized")
+    assert before == rows("bm25_search")
+    docs = pq.read_table(sf / "documents.parquet")
+    keep = [i % 2 == 0 for i in docs.column("doc_id").to_pylist()]
+    pq.write_table(docs.filter(keep), sf / "documents.parquet")
+    # the session's cached index relations match the old plan by path;
+    # drop them so only the on-disk staged index is under test
+    spark.catalog.clearCache()
+
+    after = rows("bm25_search")
+    assert after != before
+    assert rows("bm25_search_materialized") == after

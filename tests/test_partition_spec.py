@@ -326,3 +326,25 @@ def test_month_prune_canonicalizes_coercible_probes(spark, tmp_path):
     # of lexically mis-pruning the 1995-03 member
     lo, hi = "1995-3-01", "1995-4-01"
     assert st.read_where(spark, "ts", lo, hi).count() == 3
+
+
+def test_mixed_date_and_string_point_probes(spark, tmp_path):
+    """A probe batch mixing a date and its string spelling must plan
+    the same members as the date alone (the one-job prefill builds a
+    single DataFrame from all probe values)."""
+    import datetime
+
+    st = SnapshotStore(str(tmp_path))
+    rows = [
+        (i, datetime.date(2024, m, 5))
+        for i, m in enumerate([1, 1, 2, 3, 3], start=1)
+    ]
+    df = spark.createDataFrame(rows, "id int, d date")
+    st.commit(df.limit(0), mode="overwrite")
+    st.set_partition_spec([("d", "month")])
+    st.commit(df, mode="append")
+    day = datetime.date(2024, 1, 5)
+    (alone,) = st.planned_members_points(spark, "d", [day])
+    mixed = st.planned_members_points(spark, "d", [day, "2024-01-05"])
+    assert mixed == [alone, alone]
+    assert len(alone) < len(st.manifest(st.latest_version())["members"])

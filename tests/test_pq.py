@@ -4,11 +4,13 @@ properties, and the compression claim (operators/pq.py)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.operators.pq import (
     pq_encode,
     pq_topk,
+    pq_topk_fused,
     pq_train_codebooks,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
@@ -79,3 +81,22 @@ def test_pq_topk_deterministic_across_runs(spark):
     a = sorted(map(tuple, pq_topk(codes, queries, codebooks, k=K, shortlist=10 * K, corpus=emb).collect()))
     b = sorted(map(tuple, pq_topk(codes, queries, codebooks, k=K, shortlist=10 * K, corpus=emb).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "dirty", [[float("nan"), 0.0, 0.0, 0.0], [None, 0.0, 0.0, 0.0]],
+    ids=["nan", "null-element"],
+)
+def test_pq_fused_rejects_nonfinite_elements(spark, dirty):
+    """The fused encode must fail loudly on a NaN or null element instead
+    of argmin-ing differently from pq_encode's Catalyst expression."""
+    codebooks = np.array(
+        [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [1.0, 1.0]]]
+    )  # m=2 subspaces, 2 centroids, 2 dims each
+    corpus = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0, 0.0]), (2, [1.0, 1.0, 1.0, 1.0]), (3, dirty)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.where(F.col("vec_id") == 1)
+    with pytest.raises(Exception, match="finite embeddings"):
+        pq_topk_fused(corpus, queries, codebooks, k=1).collect()

@@ -399,19 +399,18 @@ def test_streaming_snapshot_source_cache_validates(spark, sf_dir):
     without the _SUCCESS touch, derived_cache_ok never returned True and
     the 3-commit store was rebuilt on every invocation."""
     import os
-    import tempfile
 
     from big_data_assignment2_2025_spark.plans.streaming_queries import (
         streaming_snapshot_source,
     )
     from big_data_assignment2_2025_spark.sources.readers import (
         derived_cache_ok,
+        derived_path,
         fixture_fingerprint,
     )
 
     streaming_snapshot_source(spark, sf_dir).collect()
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"snapsrc_{tag}")
+    base = derived_path(sf_dir, "snapsrc")
     assert derived_cache_ok(base, fixture_fingerprint(sf_dir))
     # and a second invocation reuses the store: no manifest mtime change
     mdir = os.path.join(base, "_manifests")

@@ -325,3 +325,58 @@ def test_derived_cache_invalidation(tmp_path):
     # uncommitted cache (marker but no _SUCCESS) is invalid too
     (cache / "_SUCCESS").unlink()
     assert not derived_cache_ok(str(cache), tag1)
+
+
+def test_staged_dir_builds_once_per_fixture_state(tmp_path, monkeypatch):
+    """staged_dir builds on a cold call, reuses on a warm one, rebuilds
+    after the fixture is regenerated in place, and a build that raises
+    leaves no marker so the next call rebuilds."""
+    import tempfile
+
+    import pytest
+
+    from big_data_assignment2_2025_spark.sources.readers import (
+        derived_cache_ok,
+        derived_path,
+        fixture_fingerprint,
+        staged_dir,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    fix = tmp_path / "fix"
+    fix.mkdir()
+    (fix / "orders.parquet").write_bytes(b"v1-bytes")
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        os.makedirs(path)
+        with open(os.path.join(path, f"part-{len(calls)}"), "w"):
+            pass
+
+    # cold: one build, committed at the helper's path
+    path = staged_dir(str(fix), "probe", build)
+    assert path == derived_path(str(fix), "probe") == calls[0]
+    assert derived_cache_ok(path, fixture_fingerprint(str(fix)))
+    # warm: reused as is
+    assert staged_dir(str(fix), "probe", build) == path
+    assert len(calls) == 1
+    # fixture regenerated in place: rebuilt from a cleared directory
+    os.utime(fix / "orders.parquet", ns=(1, 1))
+    staged_dir(str(fix), "probe", build)
+    assert len(calls) == 2
+    assert sorted(os.listdir(path)) == ["_FIXTURE_TAG", "_SUCCESS", "part-2"]
+
+    # a build that raises leaves no marker; the next call rebuilds
+    def broken(p):
+        os.makedirs(p)
+        raise RuntimeError("build failed")
+
+    os.utime(fix / "orders.parquet", ns=(2, 2))
+    with pytest.raises(RuntimeError):
+        staged_dir(str(fix), "probe", broken)
+    assert not derived_cache_ok(path, fixture_fingerprint(str(fix)))
+    staged_dir(str(fix), "probe", build)
+    assert len(calls) == 3
+    assert derived_cache_ok(path, fixture_fingerprint(str(fix)))
