@@ -32,7 +32,7 @@ exact L2 brute force in tests/test_pq.py (k-means codebooks aren't
 SQL-replayable — same discipline as ivf_kmeans_topk and the MLlib
 MinHashLSH cross-check). The full encode→ADC→top-k chain is additionally
 HASH-GATED through a deterministic-codebook twin
-(``pq_lowest_id_codebooks`` + plans/round9_queries.py ``ann_pq_topk`` /
+(``pq_lowest_id_codebooks`` + plans/similarity_queries.py ``ann_pq_topk`` /
 ``ann_pq_rerank``), whose DuckDB oracle replays codebooks, codes, lookup
 tables and ranking from the parquet table alone.
 """

@@ -19,8 +19,8 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import functions as F
 
 from ..operators.dedup import hash64
 from ..operators.index import (
@@ -29,7 +29,13 @@ from ..operators.index import (
     idempotent_reindex,
     incremental_reindex,
 )
-from ..sources.readers import load_table, read_corpus_tsv, read_documents
+from ..sources.readers import (
+    load_table,
+    read_corpus_tsv,
+    read_documents,
+    read_jsonl,
+    read_orc,
+)
 from ..sources.sinks import write_jsonl, write_orc, write_tsv
 
 
@@ -139,7 +145,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"orc_rt_{sf_dir.strip('/').replace('/', '_')}"
     )
     write_orc(docs, out)
-    back = spark.read.orc(out)
+    back = read_orc(spark, out)
     return back.select("doc_id", "lang", "source", "n_chars")
 
 
@@ -158,7 +164,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"jsonl_rt_{sf_dir.strip('/').replace('/', '_')}"
     )
     write_jsonl(docs, out)
-    back = spark.read.schema(docs.schema).json(out)
+    back = read_jsonl(spark, out, schema=docs.schema)
     return back.select("doc_id", "lang", "source", "n_chars")
 
 
@@ -314,6 +320,81 @@ ORDER BY r_name, n_name
 """
 
 
+def null_semantics_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Differential NULL-semantics probe — the classic cross-engine
+    divergence area, pinned as one hash-gated summary row. Derives NULLs
+    from the customer table (every 7th nation key, negative balances) and
+    checks, in one pass plus two bounded self-joins:
+    - COUNT(*) vs COUNT(col) vs COUNT(DISTINCT col) null exclusion,
+    - GROUP BY collapsing all NULL keys into ONE group,
+    - inner equi-join dropping NULL keys entirely,
+    - null-safe equality (Spark ``<=>`` / SQL IS NOT DISTINCT FROM)
+      matching NULL to NULL,
+    - SUM/AVG ignoring NULLs (integer cents, one rounded division).
+    The joins are on a 25-value key domain — bounded; the final assembly
+    cross-joins three 1-row aggregates (whitelisted scalars)."""
+    cust = load_table(spark, sf_dir, "customer")
+    t = cust.select(
+        "c_custkey",
+        F.when(F.col("c_nationkey") % 7 == 0, F.lit(None))
+        .otherwise(F.col("c_nationkey"))
+        .alias("nk"),
+        F.when(
+            F.col("c_acctbal") < 0, F.lit(None).cast("long")
+        )
+        .otherwise(F.round(F.col("c_acctbal") * 100).cast("long"))
+        .alias("bal_cents"),
+    )
+    base = t.agg(
+        F.count("*").alias("n_rows"),
+        F.count("nk").alias("n_nk_notnull"),
+        F.countDistinct("nk").alias("n_nk_distinct"),
+        (F.countDistinct("nk") + F.max(F.col("nk").isNull().cast("long"))).alias(
+            "n_groups_incl_null"
+        ),
+        F.sum("bal_cents").alias("sum_bal_cents"),
+        F.count(F.when(F.col("bal_cents").isNull(), 1)).alias("n_bal_null"),
+    )
+    a = t.select(F.col("nk").alias("k1"))
+    b = t.select(F.col("nk").alias("k2"))
+    inner = a.join(b, a.k1 == b.k2).agg(
+        F.count("*").alias("inner_join_rows")
+    )
+    nullsafe = a.join(b, a.k1.eqNullSafe(b.k2)).agg(
+        F.count("*").alias("nullsafe_join_rows")
+    )
+    return base.crossJoin(F.broadcast(inner)).crossJoin(
+        F.broadcast(nullsafe)
+    )
+
+
+NULL_SEMANTICS_SQL = """
+WITH t AS (
+  SELECT c_custkey,
+         CASE WHEN c_nationkey % 7 = 0 THEN NULL ELSE c_nationkey END AS nk,
+         CASE WHEN c_acctbal < 0 THEN NULL
+              ELSE CAST(round(c_acctbal * 100) AS BIGINT) END AS bal_cents
+  FROM customer),
+base AS (
+  SELECT COUNT(*) AS n_rows,
+         COUNT(nk) AS n_nk_notnull,
+         CAST(COUNT(DISTINCT nk) AS BIGINT) AS n_nk_distinct,
+         CAST(COUNT(DISTINCT nk)
+              + MAX(CASE WHEN nk IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_groups_incl_null,
+         CAST(SUM(bal_cents) AS BIGINT) AS sum_bal_cents,
+         COUNT(CASE WHEN bal_cents IS NULL THEN 1 END) AS n_bal_null
+  FROM t),
+inner_j AS (
+  SELECT COUNT(*) AS inner_join_rows
+  FROM t a JOIN t b ON a.nk = b.nk),
+nullsafe_j AS (
+  SELECT COUNT(*) AS nullsafe_join_rows
+  FROM t a JOIN t b ON a.nk IS NOT DISTINCT FROM b.nk)
+SELECT * FROM base, inner_j, nullsafe_j
+"""
+
+
 QUERIES = {
     "index_incremental_accumulate": index_incremental_accumulate,
     "index_rebuild_idempotent": index_rebuild_idempotent,
@@ -325,6 +406,7 @@ QUERIES = {
     "bitwise_funcs": bitwise_funcs,
     "window_range_frame": window_range_frame,
     "revenue_share_window": revenue_share_window,
+    "null_semantics_parity": null_semantics_parity,
 }
 
 ORACLES = {
@@ -338,4 +420,5 @@ ORACLES = {
     "bitwise_funcs": BITWISE_SQL,
     "window_range_frame": WINDOW_RANGE_SQL,
     "revenue_share_window": REVENUE_SHARE_SQL,
+    "null_semantics_parity": NULL_SEMANTICS_SQL,
 }

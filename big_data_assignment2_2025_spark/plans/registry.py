@@ -6,6 +6,36 @@ Every operator from SURVEY.md §2 that is implemented has a named entry in
 semantics are SQL-expressible, a matching DuckDB oracle in ``ORACLES``.
 Column names are aliased identically on both sides (the driver's comparison
 sorts columns by name before hashing).
+
+Queries live in one module per domain, placed by what they compute:
+
+- ``search_queries``: inverted index, BM25/TF-IDF retrieval, fusion,
+  phrases, snippets, spelling suggestions
+- ``tpch_queries``: the TPC-H shapes q1-q22
+- ``relational``: joins, aggregations, windows, set ops, subqueries and
+  other relational shapes outside TPC-H
+- ``sql_queries``: the spark.sql surface, UDAF/UDTF and Python data sources
+- ``events_queries``: event analytics — funnels, sessions, retention,
+  attribution, sequences
+- ``temporal_queries``: as-of and band joins, gap fill, time-series
+  statistics and control charts
+- ``text_queries``: tokenization, language ID, quality, n-grams
+- ``pipeline_queries``: training-data pipeline steps — mixing, sampling,
+  chunking, profiling, privacy audits, SCD2/CDC
+- ``dedup_queries``: exact, n-gram, MinHash, SimHash and substring dedup
+- ``similarity_queries``: embeddings — kNN/ANN (LSH, IVF, PQ, SQ8),
+  SemDeDup, moments
+- ``graph_queries``: the co-purchase graph — triangles, k-core, BFS,
+  PageRank, label propagation, modularity
+- ``sketch_queries``: HLL, count-min, KMV, bitmaps, histogram quantiles,
+  bloom filters, heavy hitters
+- ``storage_queries``: physical layout and pruning — bucketing,
+  partitioning, Z-order, file manifests
+- ``snapshot_queries``: snapshot-store verbs — time travel, MERGE, deletion
+  vectors, constraints, evolution, clones, incremental views
+- ``streaming_queries``: Structured Streaming twins of batch queries
+- ``multimodal_queries``: binary payload decode and feature extraction
+- ``parity_queries``: reference-parity round trips and engine semantics
 """
 
 from __future__ import annotations
@@ -16,84 +46,38 @@ from . import (
     graph_queries,
     multimodal_queries,
     parity_queries,
-    pipeline2_queries,
     pipeline_queries,
     relational,
-    relational2,
-    relational3,
-    round3_queries,
-    round3b_queries,
-    round4_queries,
-    round5_queries,
-    round7_queries,
-    round7b_queries,
-    round7c_queries,
-    round7d_queries,
-    round7e_queries,
-    round7f_queries,
-    round7g_queries,
-    round7h_queries,
-    round7i_queries,
-    round7j_queries,
-    round7k_queries,
-    round8_queries,
-    round8c_queries,
-    round9_queries,
-    round10_queries,
-    round11_queries,
-    round12_queries,
-    round13_queries,
-    round13b_queries,
     search_queries,
     similarity_queries,
+    sketch_queries,
+    snapshot_queries,
     sql_queries,
     storage_queries,
     streaming_queries,
     temporal_queries,
     text_queries,
+    tpch_queries,
 )
 
 _MODULES = [
     search_queries,
+    tpch_queries,
     relational,
-    relational2,
-    relational3,
-    dedup_queries,
-    graph_queries,
-    similarity_queries,
-    text_queries,
+    sql_queries,
     events_queries,
+    temporal_queries,
+    text_queries,
+    pipeline_queries,
+    dedup_queries,
+    similarity_queries,
+    graph_queries,
+    sketch_queries,
+    storage_queries,
+    snapshot_queries,
     streaming_queries,
     multimodal_queries,
-    pipeline_queries,
-    pipeline2_queries,
-    temporal_queries,
     parity_queries,
-    sql_queries,
-    round3_queries,
-    round3b_queries,
-    round4_queries,
-    round5_queries,
-    round7_queries,
-    round7b_queries,
-    round7c_queries,
-    round7d_queries,
-    round7e_queries,
-    round7f_queries,
-    round7g_queries,
-    round7h_queries,
-    round7i_queries,
-    round7j_queries,
-    round7k_queries,
-    round8_queries,
-    round8c_queries,
-    round9_queries,
-    round10_queries,
-    round11_queries,
-    round12_queries,
-    round13_queries,
-    round13b_queries,
-    storage_queries,
 ]
 
 QUERIES = {}

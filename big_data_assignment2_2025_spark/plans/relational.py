@@ -14,192 +14,70 @@ Float determinism contract (applies to every oracle-checked query here):
   Spark and DuckDB.
 - ``l_quantity`` is integral-valued, so plain double sums are exact.
 - Orderings that feed LIMIT carry a full tie-break key set.
+
+Determinism policy (same as the rest of the registry): money/value columns
+become integer cents before any arithmetic; timestamps become integer µs;
+floats appear only in final single-division ratios or fixed expression trees
+that both engines evaluate with identical IEEE-double steps, rounded on both
+sides.
+
+Time-hierarchy rollup (``orders_quarter_rollup``) and user-LTV decile
+segmentation (``user_ltv_deciles``) combine existing operator families
+(rollup × date functions, window distribution × monetary aggregation) into
+the composite queries an analytics team actually ships. Determinism: integer
+cents/counts everywhere; ntile and rank windows are fully tie-broken.
+
+- **order-independent table checksum** (``table_checksum_xor``): the
+  cross-cluster reconciliation primitive — bit_xor of a 60-bit digest of
+  each row's canonical string, grouped. XOR is commutative, so the result
+  is independent of partitioning/ordering and two clusters can compare
+  per-group fingerprints without moving data. 60 bits (15 hex chars) keeps
+  the value inside a signed BIGINT on both engines.
+
+- **MCV column stats** (``lineitem_mcv_stats``): the optimizer-style
+  most-common-values summary (top-5 values + frequency fraction per
+  column) for the low-cardinality lineitem columns, via one stacked
+  unpivot scan → (column, value) counts → per-column top-k window. The
+  ANALYZE-statistics shape: selectivity estimation at 100 TB needs MCVs
+  precisely when values are skewed, and the per-column partitioned
+  window is WindowGroupLimit-pruned so only k rows per column cross the
+  final exchange.
+
+- **salted fact⋈dim join** (``skew_join_salted``): the classic hot-key
+  mitigation for a shuffled join — a fact table whose join key is heavily
+  skewed hashes ALL of a hot key's rows to one reducer; salting splits each
+  key into B sub-keys on the fact side and REPLICATES each dim row across
+  all B salts, so a hot key's probe work spreads over B tasks. AQE's
+  skew-join splitting (on by default) handles moderate skew at runtime by
+  splitting oversized partitions, but it only splits the STREAM side of a
+  sort-merge join — when one key alone exceeds executor memory or the dim
+  is too big to broadcast, the explicit salt is the deterministic fix. The
+  DuckDB oracle is the plain unsalted join, so the gate proves the salted
+  spelling is a pure physical rewrite (dim replication is a bounded ×B
+  projection of the SMALL side — never of the fact).
+
+- **Benford audit** (``orders_benford_audit``): leading-digit
+  distribution of order totals vs Benford's law with per-digit
+  chi-square contributions — the fraud/data-entry forensic screen. The
+  expected shares are literal constants (log10(1+1/d) frozen in Python,
+  embedded in both engines' expressions), so each of the 9 bounded cells
+  is one frozen float chain over exact integer counts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
+import math
 
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
+
+from ..functions.text import tokenize
 from ..sources.readers import load_table
 
 
 def _dec(col, p=12, s=2):
     return F.col(col).cast(f"decimal({p},{s})")
-
-
-# ---------------------------------------------------------------------------
-# Aggregation pipelines
-# ---------------------------------------------------------------------------
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-heavy filter + 8-agg groupBy (SURVEY.md A1-A7
-    analogue on the synthetic star schema).
-
-    Money aggregates are carried as EXACT integer sums (cents for the
-    base price, the natural 1e-4/1e-6 fixed-point for the discount/tax
-    products) and converted to one frozen double division at the end.
-    The previous spelling summed exact DECIMALs and cast the SUM to
-    double — but the two engines round that decimal->double conversion
-    differently on 1-ulp boundary values, which the r11 10x oracle
-    sweep caught on sum_charge (invisible at sf0.1: smaller sums, a
-    boundary value never materialized). Integer sums never hit a
-    conversion boundary: qty/count values are exact in double, and each
-    money column is ONE bigint->double division on both engines.
-
-    Overflow headroom (ADVICE r12): the e4/e6 fixed-point rows are
-    ~1e9/~1e11 each, so a single BIGINT sum would wrap at roughly
-    sf>=1500 / sf>=100 (Spark wraps silently non-ANSI; DuckDB promotes
-    to HUGEINT then errors on the cast back — the engines diverge
-    exactly where a bigger sweep would land next). Each of those sums
-    is therefore split PER ROW into (value div scale, value mod scale)
-    and summed as two small BIGINTs — hi <= ~1.5e5/row, lo < scale —
-    recombined as ONE int->double add + divide at the end. Both partial
-    sums stay exactly representable in double far past sf100k, and the
-    recombination is the same two IEEE ops on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # exact per-row fixed-point: cents, then the discount/tax products
-    # stay integral at scale 1e-4 / 1e-6 (cents x cents)
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    tax_c = F.round(F.col("l_tax") * 100).cast("long")
-    disc_price_e4 = price_c * (100 - disc_c)          # scale 1e-4
-    charge_e6 = disc_price_e4 * (100 + tax_c)          # scale 1e-6
-    # per-row hi/lo split: (x - x % s) / s is exactly integral, and the
-    # double division is exact (multiple of s, < 2^53)
-    dp_lo = disc_price_e4 % 10000
-    dp_hi = ((disc_price_e4 - dp_lo) / 10000).cast("long")
-    ch_lo = charge_e6 % 1000000
-    ch_hi = ((charge_e6 - ch_lo) / 1000000).cast("long")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(price_c) / 100.0).alias("sum_base_price"),
-            (F.sum(dp_hi) + F.sum(dp_lo) / 10000.0).alias("sum_disc_price"),
-            (F.sum(ch_hi) + F.sum(ch_lo) / 1000000.0).alias("sum_charge"),
-            (F.sum("l_quantity") / F.count("*")).alias("avg_qty"),
-            (F.sum(price_c) / (F.count("*") * 100.0)).alias("avg_price"),
-            (F.sum(disc_c) / (F.count("*") * 100.0)).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-Q1_SQL = """
-WITH li AS (
-  SELECT l_returnflag, l_linestatus, l_quantity,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
-         CAST(round(l_discount * 100) AS BIGINT) AS disc_c,
-         CAST(round(l_tax * 100) AS BIGINT) AS tax_c
-  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'),
-fx AS (
-  SELECT l_returnflag, l_linestatus, l_quantity, price_c, disc_c,
-         price_c * (100 - disc_c) AS dp_e4,
-         price_c * (100 - disc_c) * (100 + tax_c) AS ch_e6
-  FROM li)
-SELECT l_returnflag, l_linestatus,
-       SUM(l_quantity) AS sum_qty,
-       CAST(SUM(price_c) AS BIGINT) / 100.0 AS sum_base_price,
-       CAST(SUM(dp_e4 // 10000) AS BIGINT)
-         + CAST(SUM(dp_e4 % 10000) AS BIGINT) / 10000.0 AS sum_disc_price,
-       CAST(SUM(ch_e6 // 1000000) AS BIGINT)
-         + CAST(SUM(ch_e6 % 1000000) AS BIGINT) / 1000000.0 AS sum_charge,
-       SUM(l_quantity) / COUNT(*) AS avg_qty,
-       CAST(SUM(price_c) AS BIGINT) / (COUNT(*) * 100.0) AS avg_price,
-       CAST(SUM(disc_c) AS BIGINT) / (COUNT(*) * 100.0) AS avg_disc,
-       COUNT(*) AS count_order
-FROM fx
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + agg + top-10 (TakeOrderedAndProject). Revenue ranked on
-    the exact decimal sum; tie-broken by orderkey."""
-    cust = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("2000-03-15").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1997-03-15").cast("timestamp")
-    )
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", 4, 2))
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(revenue.alias("rev_dec"))
-        .orderBy(F.col("rev_dec").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.col("rev_dec").cast("double").alias("revenue"),
-            "o_orderdate",
-            "o_orderpriority",
-        )
-    )
-
-
-Q3_SQL = """
-SELECT l_orderkey,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
-       o_orderdate, o_orderpriority
-FROM customer
-JOIN orders   ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '2000-03-15'
-  AND l_shipdate  > TIMESTAMP '1997-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) DESC,
-         l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """6-way star join: dims broadcast, facts shuffle once (TPC-H Q5 shape)."""
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    cust = load_table(spark, sf_dir, "customer")
-    supp = load_table(spark, sf_dir, "supplier")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(4,2)") - _dec("l_discount", 4, 2))
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .where(cust.c_nationkey == supp.s_nationkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(revenue.cast("double").alias("revenue"))
-    )
-
-
-Q5_SQL = """
-SELECT n_name,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey AND r_name = 'ASIA'
-GROUP BY n_name
-"""
 
 
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1284,6 +1162,987 @@ FROM per_cust
 """
 
 
+# ---------------------------------------------------------------------------
+# Skyline (Pareto frontier)
+# ---------------------------------------------------------------------------
+
+
+def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pareto frontier of parts: minimize retail price, maximize size. A part
+    is dominated iff some other part is no worse on both axes and strictly
+    better on one.
+
+    Scale shape: the naive formulation is a quadratic NOT-EXISTS self-join
+    (the oracle uses it — obviously correct, fine at 60k rows). Here the
+    skyline is computed from a per-size aggregate instead: a part survives
+    iff it is the cheapest at its size AND strictly cheaper than every
+    larger size's minimum. That turns an O(n²) join into one hash aggregate
+    over the fact table plus a window over the size DOMAIN (tens of rows,
+    broadcast back) — the distributive skyline trick that survives 100 TB
+    because nothing quadratic ever touches the big table.
+    """
+    part = load_table(spark, sf_dir, "part")
+    p = part.select(
+        "p_partkey",
+        "p_size",
+        F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
+    )
+    by_size = p.groupBy("p_size").agg(F.min("price_cents").alias("min_at_size"))
+    # suffix-min over strictly larger sizes; the window spans only the size
+    # domain (|distinct sizes| rows), not the part table
+    w = W.orderBy(F.desc("p_size")).rowsBetween(W.unboundedPreceding, -1)
+    suffix = by_size.withColumn("min_above", F.min("min_at_size").over(w))
+    return (
+        p.join(F.broadcast(suffix), "p_size")
+        .where(
+            (F.col("price_cents") == F.col("min_at_size"))
+            & (
+                F.col("min_above").isNull()
+                | (F.col("min_above") > F.col("price_cents"))
+            )
+        )
+        .select("p_partkey", "p_size", "price_cents")
+    )
+
+
+SKYLINE_SQL = """
+SELECT p.p_partkey, p.p_size,
+       CAST(round(p.p_retailprice * 100) AS BIGINT) AS price_cents
+FROM part p
+WHERE NOT EXISTS (
+  SELECT 1 FROM part q
+  WHERE round(q.p_retailprice * 100) <= round(p.p_retailprice * 100)
+    AND q.p_size >= p.p_size
+    AND (round(q.p_retailprice * 100) < round(p.p_retailprice * 100)
+         OR q.p_size > p.p_size))
+"""
+
+
+# ---------------------------------------------------------------------------
+# first/last/nth window value functions
+# ---------------------------------------------------------------------------
+
+
+def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """first_value / last_value / nth_value over an explicit full-partition
+    frame (the parity batch covered ranking, lag/lead, distribution, RANGE
+    and unordered frames; the value-extraction trio was the remaining window
+    family). The frame MUST be unbounded-both-ends: the default frame stops
+    at CURRENT ROW, which silently turns last_value into "current value" —
+    a classic window bug this query pins down on both engines."""
+    cust = load_table(spark, sf_dir, "customer")
+    c = cust.select(
+        "c_mktsegment",
+        "c_custkey",
+        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
+    )
+    w = (
+        W.partitionBy("c_mktsegment")
+        .orderBy("bal_cents", "c_custkey")
+        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    )
+    return (
+        c.select(
+            "c_mktsegment",
+            F.first("c_custkey").over(w).alias("poorest_cust"),
+            F.nth_value("c_custkey", 3).over(w).alias("third_poorest_cust"),
+            F.last("c_custkey").over(w).alias("richest_cust"),
+        )
+        .distinct()
+    )
+
+
+FIRST_LAST_NTH_SQL = """
+SELECT DISTINCT c_mktsegment,
+       first_value(c_custkey) OVER w AS poorest_cust,
+       nth_value(c_custkey, 3) OVER w AS third_poorest_cust,
+       last_value(c_custkey) OVER w AS richest_cust
+FROM (SELECT c_mktsegment, c_custkey,
+             CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
+      FROM customer)
+WINDOW w AS (PARTITION BY c_mktsegment ORDER BY bal_cents, c_custkey
+             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+"""
+
+
+# ---------------------------------------------------------------------------
+# Array set algebra
+# ---------------------------------------------------------------------------
+
+
+def array_set_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Set algebra on token arrays (array_intersect/union/except + Jaccard)
+    between each document's first and second 40-token windows — the
+    column-native primitive under shingle overlap and vocabulary drift
+    checks. All per-row array expressions inside one codegen stage; no
+    shuffle, no UDF."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", tokenize("text").alias("t"))
+    ab = toks.select(
+        "doc_id",
+        F.array_distinct(F.slice("t", 1, 40)).alias("a"),
+        F.array_distinct(F.slice("t", 41, 40)).alias("b"),
+    )
+    sized = ab.select(
+        "doc_id",
+        F.size("a").alias("n_a"),
+        F.size("b").alias("n_b"),
+        F.size(F.array_intersect("a", "b")).alias("n_common"),
+        F.size(F.array_union("a", "b")).alias("n_vocab"),
+        F.size(F.array_except("a", "b")).alias("n_only_first"),
+    )
+    return sized.withColumn(
+        "jaccard",
+        F.when(
+            F.col("n_vocab") > 0,
+            F.round(F.col("n_common") / F.col("n_vocab"), 6),
+        ),
+    )
+
+
+ARRAY_SET_SQL = """
+WITH t AS (
+  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_'']+') AS toks
+  FROM documents),
+ab AS (
+  SELECT doc_id, list_distinct(toks[1:40]) AS a, list_distinct(toks[41:80]) AS b
+  FROM t),
+sized AS (
+  SELECT doc_id,
+         len(a) AS n_a, len(b) AS n_b,
+         len(list_distinct(list_intersect(a, b))) AS n_common,
+         len(list_distinct(list_concat(a, b))) AS n_vocab,
+         len(list_filter(a, x -> NOT list_contains(b, x))) AS n_only_first
+  FROM ab)
+SELECT doc_id, n_a, n_b, n_common, n_vocab, n_only_first,
+       CASE WHEN n_vocab > 0 THEN round(n_common / n_vocab, 6) END AS jaccard
+FROM sized
+"""
+
+
+# ---------------------------------------------------------------------------
+# Weighted median
+# ---------------------------------------------------------------------------
+
+
+def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantity-weighted median of extended price per return flag: the
+    smallest price whose RANGE-cumulative weight reaches half the total.
+    RANGE frames make tied prices contribute as one block, so the answer is
+    a pure function of (price, weight) pairs — no interpolation, no float
+    quantile machinery (cf. percentile_stats for the unweighted family)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    rows = li.select(
+        "l_returnflag",
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        F.round("l_quantity").cast("long").alias("wt"),
+    )
+    w_cum = (
+        W.partitionBy("l_returnflag")
+        .orderBy("cents")
+        .rangeBetween(W.unboundedPreceding, 0)
+    )
+    w_all = W.partitionBy("l_returnflag")
+    x = rows.select(
+        "l_returnflag",
+        "cents",
+        F.sum("wt").over(w_cum).alias("cumw"),
+        F.sum("wt").over(w_all).alias("total"),
+    )
+    return x.groupBy("l_returnflag").agg(
+        F.min(F.when(2 * F.col("cumw") >= F.col("total"), F.col("cents"))).alias(
+            "weighted_median_cents"
+        ),
+        F.max("total").alias("total_weight"),
+    )
+
+
+WEIGHTED_MEDIAN_SQL = """
+WITH rows_ AS (
+  SELECT l_returnflag,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+         CAST(round(l_quantity) AS BIGINT) AS wt
+  FROM lineitem),
+x AS (
+  SELECT l_returnflag, cents,
+         SUM(wt) OVER (PARTITION BY l_returnflag ORDER BY cents
+                       RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cumw,
+         SUM(wt) OVER (PARTITION BY l_returnflag) AS total
+  FROM rows_)
+SELECT l_returnflag,
+       CAST(MIN(CASE WHEN 2 * cumw >= total THEN cents END) AS BIGINT)
+         AS weighted_median_cents,
+       CAST(MAX(total) AS BIGINT) AS total_weight
+FROM x GROUP BY l_returnflag
+"""
+
+
+# ---------------------------------------------------------------------------
+# Exact DECIMAL aggregation
+# ---------------------------------------------------------------------------
+
+
+def decimal_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Money aggregation in DECIMAL(18,2) — the type-system answer to float
+    drift (elsewhere the registry uses integer cents; this query gates the
+    decimal path itself). The double→decimal boundary is crossed ONCE, via
+    the registry's portable cents rounding (round(x·100) → BIGINT — Spark
+    rounds the double's shortest decimal string HALF_UP, DuckDB rounds the
+    binary value, and they only provably agree at the integer grain); from
+    there everything is exact decimal arithmetic: cents × 0.01 as a
+    DECIMAL×DECIMAL product, summed in a widened decimal accumulator, cast
+    to double at the very end. One hash aggregation."""
+    li = load_table(spark, sf_dir, "lineitem")
+    cents = "CAST(round(l_extendedprice * 100) AS DECIMAL(18,0))"
+    disc_cents = (
+        "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS DECIMAL(18,0))"
+    )
+    d = li.select(
+        "l_returnflag",
+        "l_linestatus",
+        F.expr(f"{cents} * CAST(0.01 AS DECIMAL(3,2))").alias("price_d"),
+        F.expr(f"{disc_cents} * CAST(0.01 AS DECIMAL(3,2))").alias("disc_price_d"),
+    )
+    return (
+        d.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.sum("price_d").cast("double").alias("sum_price"),
+            F.sum("disc_price_d").cast("double").alias("sum_disc_price"),
+            F.count("*").alias("n_rows"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+DECIMAL_AGG_SQL = """
+SELECT l_returnflag, l_linestatus,
+       CAST(SUM(CAST(round(l_extendedprice * 100) AS DECIMAL(18,0))
+                * CAST(0.01 AS DECIMAL(3,2))) AS DOUBLE) AS sum_price,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100)
+                     AS DECIMAL(18,0))
+                * CAST(0.01 AS DECIMAL(3,2))) AS DOUBLE) AS sum_disc_price,
+       CAST(COUNT(*) AS BIGINT) AS n_rows
+FROM lineitem
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
+
+
+# ---------------------------------------------------------------------------
+# Association rules (confidence / lift)
+# ---------------------------------------------------------------------------
+
+
+def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed 2-item association rules a→b over order baskets with
+    support ≥ 2: confidence = P(b|a), lift = confidence / P(b) — the rule
+    mining step after basket_part_pairs' co-occurrence counts. All counts
+    are integers; the two ratios are single correctly-rounded divisions.
+    Shape: one bounded basket self-join for pair supports + per-item
+    aggregates joined back. The item frames are NOT hint-broadcast: they are
+    one row per distinct part — a frame that grows with scale factor, so the
+    size decision belongs to AQE (broadcast when small, shuffle join on the
+    part key otherwise); only the 1-row n_orders scalar keeps its hint."""
+    # The distinct basket projection feeds FIVE consumers (n_orders, the
+    # per-item aggregate, both sides of the pair self-join, and the b-side
+    # re-aggregate) — planned separately, that was five lineitem scans and
+    # up to five distinct shuffles per run (r14 measurement: executed plan
+    # showed 5 FileScans, 0 reused exchanges). Materialize it ONCE with an
+    # eager localCheckpoint (guide §8 — one scan + one distinct shuffle,
+    # then every consumer reads the narrow 16-byte (orderkey, partkey)
+    # blocks); checkpoint blocks die with this frame, so nothing is served
+    # across invocations.
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .localCheckpoint()
+    )
+    n_orders = li.select("l_orderkey").distinct().agg(
+        F.count("*").alias("n_orders")
+    )
+    item = li.groupBy(F.col("l_partkey").alias("a")).agg(
+        F.count("*").alias("a_orders")
+    )
+    x = li.select("l_orderkey", F.col("l_partkey").alias("a"))
+    y = li.select("l_orderkey", F.col("l_partkey").alias("b"))
+    pairs = (
+        x.join(y, "l_orderkey")
+        .where(F.col("a") != F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("support"))
+        .where(F.col("support") >= 2)
+    )
+    b_item = item.select(
+        F.col("a").alias("b"), F.col("a_orders").alias("b_orders")
+    )
+    return (
+        pairs.join(item, "a")
+        .join(b_item, "b")
+        .crossJoin(F.broadcast(n_orders))
+        .select(
+            "a",
+            "b",
+            "support",
+            F.round(F.col("support") / F.col("a_orders"), 6).alias("confidence"),
+            F.round(
+                (F.col("support") / F.col("a_orders"))
+                / (F.col("b_orders") / F.col("n_orders")),
+                6,
+            ).alias("lift"),
+        )
+    )
+
+
+ASSOCIATION_SQL = """
+WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM li),
+item AS (SELECT l_partkey AS a, COUNT(*) AS a_orders FROM li GROUP BY 1),
+pairs AS (
+  SELECT x.l_partkey AS a, y.l_partkey AS b, COUNT(*) AS support
+  FROM li x JOIN li y
+    ON x.l_orderkey = y.l_orderkey AND x.l_partkey <> y.l_partkey
+  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
+SELECT p.a, p.b, CAST(p.support AS BIGINT) AS support,
+       round(p.support / ia.a_orders, 6) AS confidence,
+       round((p.support / ia.a_orders) / (ib.a_orders / n.n_orders), 6)
+         AS lift
+FROM pairs p
+JOIN item ia ON ia.a = p.a
+JOIN item ib ON ib.a = p.b
+CROSS JOIN n
+"""
+
+
+# ---------------------------------------------------------------------------
+# Pareto concentration (80/20)
+# ---------------------------------------------------------------------------
+
+
+def customer_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue concentration: how many top customers cover ≥80% of total
+    order revenue, and the share of the customer base they represent. A
+    cumulative-sum prefix over the per-customer AGGREGATE (never the fact
+    table), then one scalar readout — the Pareto/ABC analysis shape.
+    Deterministic: cents cumsum is exact, ordering tie-broken by custkey,
+    and the two output ratios are single rounded divisions.
+
+    Scale shape (round 4): the global rank + running sum come from
+    ``operators.ranking.with_global_rank_cumsum`` — the two-phase
+    range-partitioned prefix sum (per-bucket totals folded into literal
+    offsets + a bucket-partitioned window cumsum) this docstring used to
+    only describe. No single-partition sort; bit-identical to the window
+    form the oracle still uses."""
+    from ..operators.ranking import NtileSpec, with_global_rank_cumsum
+
+    orders = load_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
+    )
+    ranked = with_global_rank_cumsum(
+        per_cust,
+        NtileSpec(
+            "pareto",
+            -F.col("cents"),
+            [F.desc("cents"), F.col("o_custkey").asc()],
+            sub_key=F.col("o_custkey"),
+        ),
+        value=F.col("cents"),
+        rank_col="rn",
+        cumsum_col="cum_cents",
+    ).select("o_custkey", "cents", "cum_cents", "rn")
+    totals = per_cust.agg(
+        F.sum("cents").alias("total_cents"), F.count("*").alias("n_cust")
+    )
+    hit = (
+        ranked.crossJoin(F.broadcast(totals))
+        .where(5 * F.col("cum_cents") >= 4 * F.col("total_cents"))
+        .agg(
+            F.min("rn").alias("n_top_customers"),
+            F.max("n_cust").alias("n_customers"),
+        )
+    )
+    return hit.select(
+        "n_top_customers",
+        "n_customers",
+        F.round(F.col("n_top_customers") / F.col("n_customers"), 6).alias(
+            "top_frac"
+        ),
+    )
+
+
+PARETO_SQL = """
+WITH per_cust AS (
+  SELECT o_custkey,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS cents
+  FROM orders GROUP BY o_custkey),
+ranked AS (
+  SELECT o_custkey, cents,
+         SUM(cents) OVER (ORDER BY cents DESC, o_custkey
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           AS cum_cents,
+         row_number() OVER (ORDER BY cents DESC, o_custkey) AS rn
+  FROM per_cust),
+totals AS (
+  SELECT CAST(SUM(cents) AS BIGINT) AS total_cents, COUNT(*) AS n_cust
+  FROM per_cust)
+SELECT CAST(MIN(rn) AS BIGINT) AS n_top_customers,
+       CAST(MAX(n_cust) AS BIGINT) AS n_customers,
+       round(MIN(rn) / MAX(n_cust), 6) AS top_frac
+FROM ranked CROSS JOIN totals
+WHERE 5 * cum_cents >= 4 * total_cents
+"""
+
+
+def orders_quarter_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue ROLLUP over the (year, quarter) time hierarchy — subtotal
+    rows per year and a grand total in one aggregation pass (no re-scan per
+    level; Spark expands grouping sets map-side). Cents-exact."""
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.select(
+        F.year("o_orderdate").alias("yr"),
+        F.quarter("o_orderdate").alias("qtr"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    return (
+        base.rollup("yr", "qtr")
+        .agg(
+            # grouping() must be computed inside the rollup aggregate
+            F.grouping("yr").cast("int").alias("g_yr"),
+            F.grouping("qtr").cast("int").alias("g_qtr"),
+            F.count("*").alias("n_orders"),
+            F.sum("cents").alias("rev_cents"),
+        )
+        .select("yr", "qtr", "g_yr", "g_qtr", "n_orders", "rev_cents")
+    )
+
+
+QUARTER_ROLLUP_SQL = """
+SELECT year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
+       CAST(GROUPING(year(o_orderdate)) AS INTEGER) AS g_yr,
+       CAST(GROUPING(quarter(o_orderdate)) AS INTEGER) AS g_qtr,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS rev_cents
+FROM orders
+GROUP BY ROLLUP (year(o_orderdate), quarter(o_orderdate))
+"""
+
+
+def user_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lifetime-value decile segmentation: users bucketed into 10 spend
+    deciles (purchase cents, positional deciles over a fully tie-broken
+    order), then per-decile totals — the monetization report shape. The
+    decile is deterministic because the ORDER BY is a total order (cents
+    desc, user_id) over the per-user aggregate.
+
+    Scale shape: NTILE-exact deciles WITHOUT the global single-partition
+    sort, via ``operators.ranking.with_global_ntiles`` (literal range-bucket
+    boundaries -> partitioned row_number + literal offsets -> positional
+    tile formula). The oracle keeps plain NTILE; results are bit-identical."""
+    from ..operators.ranking import NtileSpec, with_global_ntiles
+
+    ev = load_table(spark, sf_dir, "events")
+    per_user = (
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+        )
+    )
+    deciled = with_global_ntiles(
+        per_user,
+        [
+            NtileSpec(
+                "decile",
+                -F.col("cents"),
+                [F.desc("cents"), F.col("user_id").asc()],
+            )
+        ],
+        n_tiles=10,
+    )
+    return (
+        deciled.groupBy("decile")
+        .agg(
+            F.count("*").alias("n_users"),
+            F.sum("cents").alias("decile_cents"),
+            F.min("cents").alias("min_cents"),
+            F.max("cents").alias("max_cents"),
+        )
+        .orderBy("decile")
+    )
+
+
+LTV_DECILES_SQL = """
+WITH per_user AS (
+  SELECT user_id,
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+deciled AS (
+  SELECT user_id, cents,
+         ntile(10) OVER (ORDER BY cents DESC, user_id) AS decile
+  FROM per_user)
+SELECT CAST(decile AS INTEGER) AS decile,
+       CAST(COUNT(*) AS BIGINT) AS n_users,
+       CAST(SUM(cents) AS BIGINT) AS decile_cents,
+       CAST(MIN(cents) AS BIGINT) AS min_cents,
+       CAST(MAX(cents) AS BIGINT) AS max_cents
+FROM deciled GROUP BY decile ORDER BY decile
+"""
+
+
+def orders_page_two(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyless pagination: page 2 of the order book (rows 11-20 by price
+    desc) via ORDER BY + OFFSET + LIMIT — deterministic because the sort is
+    a total order (price cents desc, key). Spark plans offset+limit as a
+    single TakeOrdered of offset+limit rows, so the cost is the page
+    horizon, not the table. (Real pagination at depth uses keyset
+    predicates — `WHERE (cents, key) < last_seen` — which this total order
+    makes possible; OFFSET is the operator-parity shape.)"""
+    orders = load_table(spark, sf_dir, "orders")
+    ranked = orders.select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    ).orderBy(F.desc("cents"), "o_orderkey")
+    return ranked.offset(10).limit(10)
+
+
+PAGE_TWO_SQL = """
+SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+FROM orders
+ORDER BY cents DESC, o_orderkey
+LIMIT 10 OFFSET 10
+"""
+
+
+def table_checksum_xor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-independent per-group fingerprint of ``lineitem``: each row is
+    rendered to a canonical string (decimals fixed to 2 places, dates to
+    ISO — the one encoding both engines print identically), digested to a
+    60-bit integer (15 hex chars of md5 — fits signed BIGINT), and XOR-folded
+    per ``l_returnflag``. XOR commutes, so the fingerprint is invariant to
+    partitioning, task order, and shuffle nondeterminism — two clusters
+    compare ``(group, n_rows, checksum)`` triples instead of rows. This is
+    the anti-entropy/reconciliation primitive for replicated 100 TB tables."""
+    li = load_table(spark, sf_dir, "lineitem")
+    canon = F.concat_ws(
+        "|",
+        F.col("l_orderkey"),
+        F.col("l_linenumber"),
+        F.col("l_quantity").cast("decimal(18,2)"),
+        F.col("l_extendedprice").cast("decimal(18,2)"),
+        F.col("l_discount").cast("decimal(18,2)"),
+        F.col("l_returnflag"),
+        F.col("l_linestatus"),
+        F.date_format("l_shipdate", "yyyy-MM-dd"),
+    )
+    digest60 = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    return (
+        li.select("l_returnflag", digest60.alias("d"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.expr("bit_xor(d)").alias("checksum"),
+        )
+    )
+
+
+CHECKSUM_SQL = """
+SELECT l_returnflag,
+       COUNT(*) AS n_rows,
+       bit_xor(('0x' || substr(md5(concat_ws('|',
+           l_orderkey,
+           l_linenumber,
+           CAST(l_quantity AS DECIMAL(18,2)),
+           CAST(l_extendedprice AS DECIMAL(18,2)),
+           CAST(l_discount AS DECIMAL(18,2)),
+           l_returnflag,
+           l_linestatus,
+           strftime(l_shipdate, '%Y-%m-%d'))), 1, 15))::BIGINT) AS checksum
+FROM lineitem
+GROUP BY l_returnflag
+"""
+
+
+def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Referential-integrity audit across the star schema: one row per
+    foreign key with child row count and orphan count. Each check is one
+    left join against the DISTINCT parent key (AQE broadcasts the key
+    projections that fit) + one partial-aggregating pass — no scalar
+    cross joins, no driver-side counts. The cross-table data-quality
+    gate a 100 TB warehouse runs after every load."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+
+    def check(name, child, child_key, parent, parent_key):
+        pk = parent.select(F.col(parent_key).alias("__k")).distinct().withColumn(
+            "__hit", F.lit(1)
+        )
+        j = child.select(F.col(child_key).alias("__k")).join(pk, "__k", "left")
+        return j.agg(
+            F.lit(name).alias("fk"),
+            F.count("*").alias("n_child"),
+            F.sum(F.when(F.col("__hit").isNull(), 1).otherwise(0)).alias(
+                "n_orphans"
+            ),
+        )
+
+    checks = [
+        check("lineitem.l_orderkey->orders", li, "l_orderkey", orders, "o_orderkey"),
+        check("orders.o_custkey->customer", orders, "o_custkey", cust, "c_custkey"),
+        check("customer.c_nationkey->nation", cust, "c_nationkey", nation, "n_nationkey"),
+    ]
+    out = checks[0]
+    for c in checks[1:]:
+        out = out.unionAll(c)
+    return out
+
+
+FK_AUDIT_SQL = """
+SELECT 'lineitem.l_orderkey->orders' AS fk,
+       COUNT(*) AS n_child,
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
+FROM lineitem c
+LEFT JOIN (SELECT DISTINCT o_orderkey AS __k FROM orders) p ON c.l_orderkey = p.__k
+UNION ALL
+SELECT 'orders.o_custkey->customer',
+       COUNT(*),
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM orders c
+LEFT JOIN (SELECT DISTINCT c_custkey AS __k FROM customer) p ON c.o_custkey = p.__k
+UNION ALL
+SELECT 'customer.c_nationkey->nation',
+       COUNT(*),
+       CAST(SUM(CASE WHEN p.__k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+FROM customer c
+LEFT JOIN (SELECT DISTINCT n_nationkey AS __k FROM nation) p ON c.c_nationkey = p.__k
+"""
+
+
+# --------------------------------------------------------------------------
+# MCV column stats
+# --------------------------------------------------------------------------
+
+#: the low-cardinality lineitem columns an optimizer keeps MCVs for
+_MCV_COLS = {
+    "l_returnflag": "l_returnflag",
+    "l_linestatus": "l_linestatus",
+    # DOUBLE in the fixture but integral-valued; the BIGINT cast keeps the
+    # string rendering engine-identical ("23", not "23.0" vs "23.0")
+    "l_quantity": "CAST(l_quantity AS BIGINT)",
+}
+
+
+_MCV_K = 5
+
+
+def lineitem_mcv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 most-common values per column with frequency fractions —
+    the ANALYZE-style MCV statistics a cost-based optimizer consults for
+    selectivity on skewed columns.
+
+    One scan feeds a stacked unpivot (columns x rows projection — no
+    shuffle), one (column, value) count aggregate (map-side partial; the
+    shuffle carries at most columns x distinct-values rows), and a
+    per-column top-k window that WindowGroupLimit prunes to k rows per
+    task per column before the window exchange. The total-row count
+    rides the same scan via a grouping on the column name only."""
+    li = load_table(spark, sf_dir, "lineitem")
+    stacked = li.select(
+        F.expr(
+            "stack({n}, {args}) AS (col_name, val)".format(
+                n=len(_MCV_COLS),
+                args=", ".join(
+                    f"'{name}', CAST({expr} AS STRING)"
+                    for name, expr in _MCV_COLS.items()
+                ),
+            )
+        )
+    )
+    counts = stacked.groupBy("col_name", "val").agg(
+        F.count("*").cast("long").alias("n")
+    )
+    totals = counts.groupBy("col_name").agg(
+        F.sum("n").cast("long").alias("total")
+    )
+    w = Window.partitionBy("col_name").orderBy(
+        F.col("n").desc(), F.col("val").asc()
+    )
+    return (
+        counts.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= _MCV_K)
+        .join(F.broadcast(totals), "col_name")
+        .select(
+            "col_name",
+            F.col("rank").cast("int").alias("rank"),
+            "val",
+            "n",
+            F.round(
+                F.col("n").cast("double") / F.col("total").cast("double"), 6
+            ).alias("freq"),
+        )
+        .orderBy("col_name", "rank")
+    )
+
+
+MCV_STATS_SQL = f"""
+WITH stacked AS (
+  {" UNION ALL ".join(
+      f"SELECT '{name}' AS col_name, CAST({expr} AS VARCHAR) AS val FROM lineitem"
+      for name, expr in _MCV_COLS.items()
+  )}
+),
+counts AS (
+  SELECT col_name, val, CAST(count(*) AS BIGINT) AS n
+  FROM stacked GROUP BY 1, 2
+),
+totals AS (
+  SELECT col_name, CAST(sum(n) AS BIGINT) AS total FROM counts GROUP BY 1
+),
+ranked AS (
+  SELECT col_name, val, n,
+         row_number() OVER (PARTITION BY col_name
+                            ORDER BY n DESC, val ASC) AS rank
+  FROM counts
+)
+SELECT r.col_name, CAST(r.rank AS INTEGER) AS rank, r.val, r.n,
+       round(CAST(r.n AS DOUBLE) / CAST(t.total AS DOUBLE), 6) AS freq
+FROM ranked r JOIN totals t USING (col_name)
+WHERE r.rank <= {_MCV_K}
+ORDER BY col_name, rank
+"""
+
+
+# --------------------------------------------------------------------------
+# Salted skew join
+# --------------------------------------------------------------------------
+
+#: salt fan-out: a hot key's rows spread over this many join tasks
+_N_SALTS = 8
+
+
+def skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events ⋈ customer on ``user_id = c_custkey`` with an explicit
+    ×8 salt, aggregated per market segment.
+
+    Fact side: a deterministic row-level salt (``pmod(hash(event_id), 8)``
+    — content-derived, no RNG state, stable across retries). Dim side:
+    each customer row is replicated across all 8 salts via a bounded
+    ``explode`` (a projection — no shuffle; the replication factor applies
+    to the SMALL side only). The join keys on ``(user_id, _salt)``, so the
+    hottest user's probe rows land on 8 different reducers instead of 1;
+    the ``SHUFFLE_MERGE`` hint pins the shuffled path the salt is for (a
+    broadcast join has no reducer to skew — when the dim fits in memory,
+    broadcast and skip the salt entirely).
+
+    Every fact row carries exactly one salt and its dim match exists at
+    exactly that salt, so the salted join EQUALS the plain join — which is
+    what the unsalted DuckDB oracle gates."""
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
+    fact = ev.withColumn(
+        "_salt", F.pmod(F.hash("event_id"), F.lit(_N_SALTS))
+    )
+    dim = (
+        load_table(spark, sf_dir, "customer")
+        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
+        .withColumn(
+            "_salt", F.explode(F.array(*[F.lit(i) for i in range(_N_SALTS)]))
+        )
+    )
+    joined = fact.join(dim.hint("SHUFFLE_MERGE"), ["user_id", "_salt"])
+    return (
+        joined.groupBy("c_mktsegment")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .orderBy("c_mktsegment")
+    )
+
+
+SKEW_JOIN_SALTED_SQL = """
+SELECT c.c_mktsegment,
+       count(*) AS n_events,
+       count(DISTINCT e.user_id) AS n_users,
+       round(sum(e.value), 4) AS total_value
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+GROUP BY c.c_mktsegment
+ORDER BY c.c_mktsegment
+"""
+
+
+# --------------------------------------------------------------------------
+# Column entropy profile (information-theoretic feature audit)
+# --------------------------------------------------------------------------
+
+#: integer scale for per-value n·ln(n) terms
+_ENT_SCALE = 1_000_000
+
+
+_ENT_COLS = ["p_brand", "p_type", "p_size"]
+
+
+def part_attribute_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shannon entropy (nats) of each part attribute — the profiling
+    number behind "is this column informative or near-constant", used for
+    feature selection and partition-key choice.
+
+    H = ln(N) − Σ n_v·ln(n_v)/N needs a float SUM over values — which is
+    order-dependent and would break the hash gate. The fix is the repo's
+    integerize-the-terms discipline: each value's n·ln(n) term is frozen
+    to an integer micro-nat (floor(x·1e6 + 0.5)) BEFORE aggregation, so
+    the sum is a BIGINT (exact in any order) and the only float chain is
+    one ln and two divisions per OUTPUT row. norm_entropy divides by the
+    ln of the distinct count (the column's maximum possible entropy).
+    One stack projection + two small aggregates; at 100 TB the value
+    histogram per column is the only shuffle, bounded by the columns'
+    cardinality."""
+    part = load_table(spark, sf_dir, "part")
+    stacked = part.select(
+        F.expr(
+            "stack({}, {})".format(
+                len(_ENT_COLS),
+                ", ".join(f"'{c}', CAST({c} AS STRING)" for c in _ENT_COLS),
+            )
+        ).alias("column", "val")
+    )
+    counts = stacked.groupBy("column", "val").agg(F.count("*").alias("n_v"))
+    per_col = counts.groupBy("column").agg(
+        F.sum("n_v").alias("n_rows"),
+        F.count("*").alias("n_values"),
+        F.sum(
+            F.expr(
+                f"CAST(floor(n_v * ln(n_v) * {_ENT_SCALE} + 0.5) AS BIGINT)"
+            )
+        ).alias("s_micro"),
+    )
+    n = F.col("n_rows").cast("double")
+    entropy = F.log(n) - F.col("s_micro") / n / F.lit(float(_ENT_SCALE))
+    return per_col.select(
+        "column",
+        "n_rows",
+        "n_values",
+        F.round(entropy, 6).alias("entropy_nats"),
+        F.round(
+            entropy / F.log(F.col("n_values").cast("double")), 6
+        ).alias("norm_entropy"),
+    ).orderBy("column")
+
+
+PART_ENTROPY_SQL = f"""
+WITH stacked AS (
+  SELECT 'p_brand' AS "column", CAST(p_brand AS VARCHAR) AS val FROM part
+  UNION ALL
+  SELECT 'p_type', CAST(p_type AS VARCHAR) FROM part
+  UNION ALL
+  SELECT 'p_size', CAST(p_size AS VARCHAR) FROM part
+),
+counts AS (
+  SELECT "column", val, count(*) AS n_v FROM stacked GROUP BY 1, 2
+),
+per_col AS (
+  SELECT "column",
+         CAST(SUM(n_v) AS BIGINT) AS n_rows,
+         COUNT(*) AS n_values,
+         SUM(CAST(floor(n_v * ln(n_v) * {_ENT_SCALE} + 0.5) AS BIGINT)) AS s_micro
+  FROM counts GROUP BY 1
+)
+SELECT "column", n_rows, n_values,
+       round(ln(CAST(n_rows AS DOUBLE))
+             - s_micro / CAST(n_rows AS DOUBLE) / {float(_ENT_SCALE)}, 6) AS entropy_nats,
+       round((ln(CAST(n_rows AS DOUBLE))
+              - s_micro / CAST(n_rows AS DOUBLE) / {float(_ENT_SCALE)})
+             / ln(CAST(n_values AS DOUBLE)), 6) AS norm_entropy
+FROM per_col
+ORDER BY "column"
+"""
+
+
+# --------------------------------------------------------------------------
+# Benford leading-digit audit
+# --------------------------------------------------------------------------
+
+#: Benford expected share per leading digit, frozen in Python and embedded
+#: as identical repr-literals in both engines' expressions.
+_BENFORD_P = {d: math.log10(1.0 + 1.0 / d) for d in range(1, 10)}
+
+
+_DIGIT_EXPR = (
+    "CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING), 1, 1)"
+    " AS INT)"
+)
+
+
+_EXPECTED_CASE = (
+    # CAST each branch literal: DuckDB parses bare decimal literals as
+    # DECIMAL (Spark as DOUBLE); the cast pins both engines to the same
+    # IEEE double before any arithmetic touches the value.
+    "CASE digit "
+    + " ".join(
+        f"WHEN {d} THEN CAST({_BENFORD_P[d]!r} AS DOUBLE)" for d in range(1, 10)
+    )
+    + " END"
+)
+
+
+def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leading-digit census of o_totalprice against Benford's law: per
+    digit, the observed count/share, the expected share, and the
+    chi-square contribution ((obs − N·p)²/(N·p), micro-rounded). One
+    hash aggregation to 9 cells + a 1-row total scalar; every float op
+    runs on the bounded cell frame."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_totalprice") >= 1.0
+    )
+    digits = orders.select(F.expr(_DIGIT_EXPR).alias("digit"))
+    counts = digits.groupBy("digit").agg(F.count("*").cast("long").alias("n"))
+    total = digits.agg(F.count("*").alias("n_total"))  # 1-row scalar
+    return (
+        counts.crossJoin(F.broadcast(total))
+        .select(
+            "digit",
+            "n",
+            F.expr(f"round({_EXPECTED_CASE}, 6)").alias("expected_share"),
+            F.expr(
+                "round(CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE), 6)"
+            ).alias("obs_share"),
+            F.expr(
+                f"CAST(floor("
+                f"  pow(CAST(n AS DOUBLE) - CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}), 2)"
+                f"  / (CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}))"
+                f"  * 1000000 + 0.5) AS BIGINT)"
+            ).alias("chi2_micros"),
+        )
+        .orderBy("digit")
+    )
+
+
+BENFORD_SQL = f"""
+WITH digits AS (
+  SELECT {_DIGIT_EXPR} AS digit
+  FROM orders WHERE o_totalprice >= 1.0
+),
+counts AS (
+  SELECT digit, CAST(count(*) AS BIGINT) AS n FROM digits GROUP BY digit
+),
+total AS (SELECT count(*) AS n_total FROM digits)
+SELECT digit, n,
+       round({_EXPECTED_CASE}, 6) AS expected_share,
+       round(CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS obs_share,
+       CAST(floor(
+         pow(CAST(n AS DOUBLE) - CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}), 2)
+         / (CAST(n_total AS DOUBLE) * ({_EXPECTED_CASE}))
+         * 1000000 + 0.5) AS BIGINT) AS chi2_micros
+FROM counts CROSS JOIN total
+ORDER BY digit
+"""
+
+
 QUERIES = {
     "array_hof_funcs": array_hof_funcs,
     "basket_part_pairs": basket_part_pairs,
@@ -1296,9 +2155,6 @@ QUERIES = {
     "window_distribution": window_distribution,
     "merge_upsert_orders": merge_upsert_orders,
     "percentile_stats": percentile_stats,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_region_revenue": q5_region_revenue,
     "agg_distinct": agg_distinct,
     "having_filter": having_filter,
     "rollup_agg": rollup_agg,
@@ -1326,6 +2182,22 @@ QUERIES = {
     "date_funcs": date_funcs,
     "math_funcs": math_funcs,
     "case_when_null": case_when_null,
+    "skyline_parts": skyline_parts,
+    "window_first_last_nth": window_first_last_nth,
+    "array_set_funcs": array_set_funcs,
+    "weighted_median_price": weighted_median_price,
+    "decimal_exact_agg": decimal_exact_agg,
+    "association_rules": association_rules,
+    "customer_pareto_8020": customer_pareto_8020,
+    "orders_page_two": orders_page_two,
+    "orders_quarter_rollup": orders_quarter_rollup,
+    "user_ltv_deciles": user_ltv_deciles,
+    "fk_integrity_audit": fk_integrity_audit,
+    "table_checksum_xor": table_checksum_xor,
+    "lineitem_mcv_stats": lineitem_mcv_stats,
+    "skew_join_salted": skew_join_salted,
+    "part_attribute_entropy": part_attribute_entropy,
+    "orders_benford_audit": orders_benford_audit,
 }
 
 ORACLES = {
@@ -1340,9 +2212,6 @@ ORACLES = {
     "window_distribution": WINDOW_DISTRIBUTION_SQL,
     "merge_upsert_orders": MERGE_UPSERT_SQL,
     "percentile_stats": PERCENTILE_SQL,
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q5_region_revenue": Q5_SQL,
     "agg_distinct": AGG_DISTINCT_SQL,
     "having_filter": HAVING_SQL,
     "rollup_agg": ROLLUP_SQL,
@@ -1370,4 +2239,20 @@ ORACLES = {
     "date_funcs": DATE_SQL,
     "math_funcs": MATH_SQL,
     "case_when_null": CASE_SQL,
+    "skyline_parts": SKYLINE_SQL,
+    "window_first_last_nth": FIRST_LAST_NTH_SQL,
+    "array_set_funcs": ARRAY_SET_SQL,
+    "weighted_median_price": WEIGHTED_MEDIAN_SQL,
+    "decimal_exact_agg": DECIMAL_AGG_SQL,
+    "association_rules": ASSOCIATION_SQL,
+    "customer_pareto_8020": PARETO_SQL,
+    "orders_page_two": PAGE_TWO_SQL,
+    "orders_quarter_rollup": QUARTER_ROLLUP_SQL,
+    "user_ltv_deciles": LTV_DECILES_SQL,
+    "fk_integrity_audit": FK_AUDIT_SQL,
+    "table_checksum_xor": CHECKSUM_SQL,
+    "lineitem_mcv_stats": MCV_STATS_SQL,
+    "skew_join_salted": SKEW_JOIN_SALTED_SQL,
+    "part_attribute_entropy": PART_ENTROPY_SQL,
+    "orders_benford_audit": BENFORD_SQL,
 }

@@ -1,9 +1,12 @@
-"""Round-7 queries: deterministic-sketch observability surfaces.
+"""Mergeable-sketch queries: HLL, count-min, KMV, exact bitmaps,
+histogram quantiles, bloom filters and heavy hitters.
 
-The round-7 theme is sketches whose STATE is engine-reproducible
-(SCALING §13) — the HLL rolling-DAU twins live with their families
-(``plans/round5_queries.py``, ``plans/streaming_queries.py``); this
-module holds the rest of the deterministic-sketch surface:
+Every sketch here has a STATE that is engine-reproducible (SCALING §13), so
+each query is hash-gated against a literal DuckDB mirror (integer algebra +
+frozen-order IEEE tails only) — including the HLL rolling-DAU twin
+``events_rolling_dau_approx`` of ``events_queries.events_rolling_dau``, via
+the deterministic sketch of ``operators/sketches.py``. The streaming twins
+live in ``plans/streaming_queries.py``.
 
 - **histogram quantiles** (``events_value_quantiles_hist``): per-type
   p50/p90/p99 of ``events.value`` via the mergeable fixed-range
@@ -13,22 +16,32 @@ module holds the rest of the deterministic-sketch surface:
   cumulative-count inversion, error bounded by one bin width. The
   monitoring shape a 100 TB pipeline runs hourly, where the exact
   rank-based path (``operators/ranking.py``) would re-rank the world.
+
 - **rolling quantiles** (``events_rolling_quantiles_hist``): 7-day
   sliding p50/p99 by ADDING day histograms over a bounded count fan-out
   — exact quantiles don't decompose over sliding windows; counts do.
+
 - **HLL set algebra** (``events_audience_overlap_hll``): distinct-user
   union by per-bucket register max, intersection by inclusion-exclusion
   on the micro-rounded estimates — audience overlap without ever
   shuffling a user set.
+
 - **one-scan profiling** (``lineitem_distinct_profile_hll``): per-column
   approx distinct via a stack unpivot feeding per-column registers.
+
 - **Bloom semi-join pruning** (``orders_bloom_prune``): 4 KB bit_or
   bitmap build, literal-map codegen probe with zero joins/exchanges on
   the fact side, deterministic false-positive set.
 
-No counterpart in the reference (index+query only); LLM-pipeline
-extension per SURVEY.md §7.6, hash-gated against a literal DuckDB
-mirror (integer algebra + frozen-order IEEE tails only).
+- **chunked-bitmap exact distinct** (``events_bitmap_daily_users``):
+  exact per-day distinct users via 32-bit bitmap words (``bit_or`` of
+  ``1 << (user_id % 32)`` grouped by ``user_id DIV 32``) — the
+  ClickHouse/Doris "bitmap" aggregate rebuilt from public integer
+  primitives. ``bit_or`` combines map-side, so the shuffle carries at
+  most days x occupied-words rows (8 bytes each) regardless of event
+  volume — the EXACT counterpart to the HLL sketch family
+  (``operators/sketches.py``): HLL when 2% error is fine, bitmaps when
+  the id space is dense and exactness is required.
 """
 
 from __future__ import annotations
@@ -36,9 +49,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens_of
 from ..operators.sketches import (
     bloom_bitmap,
     bloom_probe_flag,
+    heavy_hitters,
     hist_quantile_sketch,
     hll_estimate,
     hll_merge,
@@ -46,13 +61,125 @@ from ..operators.sketches import (
 )
 from ..sources.readers import load_table
 
+
+def heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact heavy hitters over the token stream WITHOUT shuffling the full
+    vocabulary: ``operators.sketches.heavy_hitters`` (freqItems candidate
+    pass -> one exact verification aggregate whose group key folds
+    non-candidates into a NULL bucket, so counts AND the grand total come
+    from the same scan). The result is bit-equal to the full
+    ``GROUP BY ... HAVING`` oracle, but the only keys that ever shuffle
+    are the <=1/support candidates (+1 bucket) — at 100 TB the difference
+    between shuffling a 1e9-term vocabulary and ~100 keys."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    toks = tokens_of(docs.select("text"))
+    return heavy_hitters(toks, "term", support=0.01)
+
+
+HEAVY_HITTERS_SQL = """
+WITH tok AS (
+  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9_'']+')) AS term
+  FROM documents WHERE text IS NOT NULL
+),
+tot AS (SELECT COUNT(*) AS n_total FROM tok)
+SELECT term, COUNT(*) AS cnt, (SELECT n_total FROM tot) AS n_total
+FROM tok
+GROUP BY term
+HAVING COUNT(*) > 0.01 * (SELECT n_total FROM tot)
+"""
+
+
+def events_rolling_dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HLL-sketch twin of ``events_rolling_dau``, built on the
+    DETERMINISTIC HyperLogLog of ``operators/sketches.py`` (md5-carved
+    52-bit hash, 512 registers) instead of Spark's engine-opaque
+    ``approx_count_distinct`` — same HLL++ family, but the registers are
+    reproducible from the data alone, so the query is value-verifiable
+    cross-engine (hash-gated oracle) where the built-in never could be.
+
+    This is the decomposable path for EXTREME scale, and the plan shows
+    it: facts reduce to per-day registers FIRST (map-side-partial max,
+    <= days x 512 rows out of the scan — independent of user count),
+    the bounded 7-day fan-out then replicates REGISTERS, not users, and
+    the window merge is another partial max. Total shuffle is
+    O(days x 512) rows whatever the event volume — compare the exact
+    twin's 7 x daily-active rows. Emits the raw estimator plus the
+    (v_empty, reg_sum) sketch state; the ln-based small-range correction
+    is a driver-side post-step (see ``hll_estimate``). Days observed only
+    through NULL user_ids carry an empty window sketch and are emitted by
+    neither engine (the raw estimator is degenerate on an empty sketch)."""
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(F.to_date("ts").alias("day"), "user_id")
+    day_reg = hll_registers(base, ["day"], "user_id")
+    fan = day_reg.select(
+        F.explode(F.sequence(F.col("day"), F.date_add(F.col("day"), 6))).alias(
+            "win_day"
+        ),
+        "bucket",
+        "r",
+    )
+    observed = ev.select(F.to_date("ts").alias("win_day")).distinct()
+    win_reg = hll_merge(fan.join(observed, "win_day"), ["win_day"])
+    return hll_estimate(win_reg, ["win_day"], out_col="dau7_hll_micro").select(
+        F.col("win_day").alias("day"), "v_empty", "reg_sum", "dau7_hll_micro"
+    )
+
+
+# Literal SQL mirror of hll_registers/hll_merge/hll_estimate: same 52-bit
+# md5 hash, same integer register algebra, same frozen-order IEEE estimate
+# chain (((alpha * m) * m) * 2^44 / S) * 1e6 — bit-identical by
+# construction (operators/sketches.py docstrings).
+HLL_ROLLING_DAU_SQL = """
+WITH h AS (
+  SELECT CAST(ts AS DATE) AS day,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS hv
+  FROM events WHERE user_id IS NOT NULL
+),
+br AS (
+  SELECT day, hv % 512 AS bucket,
+         CASE WHEN (hv >> 9) = 0 THEN 44
+              ELSE 44 - length(bin(hv >> 9)) END AS rho
+  FROM h
+),
+day_reg AS (SELECT day, bucket, MAX(rho) AS r FROM br GROUP BY day, bucket),
+fan AS (
+  SELECT day + CAST(t.k AS INTEGER) AS win_day, bucket, r
+  FROM day_reg, range(7) t(k)
+),
+obs AS (SELECT DISTINCT CAST(ts AS DATE) AS win_day FROM events),
+win_reg AS (
+  SELECT f.win_day, f.bucket, MAX(f.r) AS r
+  FROM fan f JOIN obs USING (win_day)
+  GROUP BY f.win_day, f.bucket
+),
+agg AS (
+  SELECT win_day,
+         CAST(512 - COUNT(*) AS BIGINT) AS v_empty,
+         CAST(CAST(SUM(CAST(1 AS BIGINT) << (44 - r)) AS BIGINT)
+              + (512 - COUNT(*)) * 17592186044416 AS BIGINT) AS reg_sum
+  FROM win_reg GROUP BY win_day
+)
+SELECT win_day AS day, v_empty, reg_sum,
+       CAST(round((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
+                  * 17592186044416.0 / CAST(reg_sum AS DOUBLE) * 1000000.0)
+            AS BIGINT) AS dau7_hll_micro
+FROM agg
+"""
+
+
 #: events.value sits in (0, ~500]; the sketch domain is the fixed range
 #: [0, 512) at micro precision — 256 bins of exactly 2.0 units. Values
 #: outside saturate into the end bins (documented fixed-range-histogram
 #: semantics; the fixture never exercises saturation, tests do).
 VALUE_LO_MICRO = 0
+
+
 VALUE_HI_MICRO = 512_000_000
+
+
 VALUE_BINS = 256
+
+
 VALUE_PERCENTS = [50, 90, 99]
 
 
@@ -831,7 +958,179 @@ FROM est e LEFT JOIN tc t USING (day, user_id)
 """
 
 
+# --------------------------------------------------------------------------
+# Chunked-bitmap exact distinct
+# --------------------------------------------------------------------------
+
+#: 32-bit words: the widest shift that stays clear of BIGINT sign-bit
+#: overflow on every engine (DuckDB raises on ``1::BIGINT << 63``).
+_WORD_BITS = 32
+
+
+def bitmap_distinct_agg(
+    df: DataFrame, group_cols: list, id_col: str
+) -> DataFrame:
+    """Exact distinct count of non-negative ``id_col`` per group via
+    chunked 32-bit bitmap words: (group, ``id DIV 32``) → ``bit_or`` of
+    ``1 << (id % 32)`` → sum of ``bit_count``. Both aggregates combine
+    map-side; the only data-sized shuffle carries ≤ groups x
+    ceil(id_universe/32) 8-byte words. Returns (group_cols..., dau,
+    words_touched)."""
+    words = (
+        df.select(
+            *group_cols,
+            F.expr(f"{id_col} DIV {_WORD_BITS}").alias("bucket"),
+            F.expr(
+                f"shiftleft(CAST(1 AS BIGINT), CAST(pmod({id_col}, {_WORD_BITS}) AS INT))"
+            ).alias("bit"),
+        )
+        .groupBy(*group_cols, "bucket")
+        .agg(F.bit_or("bit").alias("word"))
+    )
+    return words.groupBy(*group_cols).agg(
+        F.sum(F.bit_count("word")).cast("long").alias("dau"),
+        F.count("*").cast("long").alias("words_touched"),
+    )
+
+
+def events_bitmap_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact distinct users per day via chunked bitmap words.
+
+    Each user occupies one bit of word ``user_id DIV 32``; ``bit_or``
+    unions bitmaps and is a partial aggregate, so every map task emits at
+    most one 8-byte word per (day, bucket) before the shuffle — at 100 TB
+    the shuffle is days x ceil(id_universe/32) words, independent of the
+    event count, and the per-group state is a single BIGINT (vs
+    ``collect_set``'s unbounded set). ``bit_count`` then reads the exact
+    cardinality straight off the words. Dense-id exact counterpart of the
+    HLL path (``events_rolling_dau_approx``)."""
+    ev = load_table(spark, sf_dir, "events").where(
+        F.col("user_id").isNotNull() & (F.col("user_id") >= 0)
+    )
+    return bitmap_distinct_agg(
+        ev.select(F.to_date("ts").alias("day"), "user_id"), ["day"], "user_id"
+    ).orderBy("day")
+
+
+BITMAP_DAU_SQL = f"""
+WITH words AS (
+  SELECT CAST(ts AS DATE) AS day,
+         user_id // {_WORD_BITS} AS bucket,
+         bit_or(CAST(1 AS BIGINT) << CAST(user_id % {_WORD_BITS} AS INT)) AS word
+  FROM events
+  WHERE user_id IS NOT NULL AND user_id >= 0
+  GROUP BY 1, 2
+)
+SELECT day,
+       CAST(sum(bit_count(word)) AS BIGINT) AS dau,
+       CAST(count(*) AS BIGINT) AS words_touched
+FROM words
+GROUP BY day
+ORDER BY day
+"""
+
+
+# --------------------------------------------------------------------------
+# HLL rollup across time grains (continuous-aggregate pattern)
+# --------------------------------------------------------------------------
+
+
+def events_dau_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-user estimates at DAY, WEEK, and MONTH grain from ONE
+    per-day register table — the continuous-aggregate pattern: because
+    HLL merge is per-bucket max (associative, commutative, idempotent),
+    the finest-grain sketch re-aggregates to every coarser grain without
+    touching the fact table again. At 100 TB the day-register table is
+    O(days x 512) rows total; each rollup is a register-max groupBy over
+    it — compare three separate COUNT(DISTINCT) passes, each a full-fact
+    shuffle. Week boundaries are epoch-day arithmetic (engine-neutral),
+    month via date_trunc. Same deterministic register algebra as the
+    rolling-DAU family, so all three grains hash-gate."""
+    from ..operators.sketches import hll_estimate, hll_merge, hll_registers
+
+    ev = load_table(spark, sf_dir, "events")
+    base = ev.select(F.to_date("ts").alias("day"), "user_id")
+    day_reg = hll_registers(base, ["day"], "user_id").persist()
+
+    epoch = F.lit("1970-01-01").cast("date")
+
+    def grain(df, period_col, label):
+        reg = hll_merge(
+            df.select(period_col.alias("period_start"), "bucket", "r"),
+            ["period_start"],
+        )
+        est = hll_estimate(reg, ["period_start"], out_col="dau_hll_micro")
+        return est.select(
+            F.lit(label).alias("grain"),
+            "period_start",
+            "v_empty",
+            "reg_sum",
+            "dau_hll_micro",
+        )
+
+    day_g = grain(day_reg, F.col("day"), "day")
+    week_g = grain(
+        day_reg,
+        F.date_add(
+            epoch,
+            (F.floor(F.datediff(F.col("day"), epoch) / 7) * 7).cast("int"),
+        ),
+        "week",
+    )
+    month_g = grain(day_reg, F.trunc(F.col("day"), "month"), "month")
+    return day_g.unionAll(week_g).unionAll(month_g).orderBy(
+        "grain", "period_start"
+    )
+
+
+DAU_ROLLUP_HLL_SQL = """
+WITH h AS (
+  SELECT CAST(ts AS DATE) AS day,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS hv
+  FROM events WHERE user_id IS NOT NULL
+),
+br AS (
+  SELECT day, hv % 512 AS bucket,
+         CASE WHEN (hv >> 9) = 0 THEN 44
+              ELSE 44 - length(bin(hv >> 9)) END AS rho
+  FROM h
+),
+day_reg AS (SELECT day, bucket, MAX(rho) AS r FROM br GROUP BY day, bucket),
+grains AS (
+  SELECT 'day' AS grain, day AS period_start, bucket, r FROM day_reg
+  UNION ALL
+  SELECT 'week',
+         DATE '1970-01-01'
+           + CAST(((day - DATE '1970-01-01') // 7) * 7 AS INTEGER),
+         bucket, r
+  FROM day_reg
+  UNION ALL
+  SELECT 'month', CAST(date_trunc('month', day) AS DATE), bucket, r
+  FROM day_reg
+),
+merged AS (
+  SELECT grain, period_start, bucket, MAX(r) AS r
+  FROM grains GROUP BY 1, 2, 3
+),
+agg AS (
+  SELECT grain, period_start,
+         CAST(512 - COUNT(*) AS BIGINT) AS v_empty,
+         CAST(CAST(SUM(CAST(1 AS BIGINT) << (44 - r)) AS BIGINT)
+              + (512 - COUNT(*)) * 17592186044416 AS BIGINT) AS reg_sum
+  FROM merged GROUP BY 1, 2
+)
+SELECT grain, period_start, v_empty, reg_sum,
+       CAST(round((0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
+                  * 17592186044416.0 / CAST(reg_sum AS DOUBLE) * 1000000.0)
+            AS BIGINT) AS dau_hll_micro
+FROM agg
+ORDER BY grain, period_start
+"""
+
+
 QUERIES = {
+    "events_rolling_dau_approx": events_rolling_dau_approx,
+    "heavy_hitter_terms": heavy_hitter_terms,
     "events_value_quantiles_hist": events_value_quantiles_hist,
     "events_audience_overlap_hll": events_audience_overlap_hll,
     "orders_bloom_prune": orders_bloom_prune,
@@ -839,14 +1138,20 @@ QUERIES = {
     "lineitem_distinct_profile_hll": lineitem_distinct_profile_hll,
     "events_user_freq_cms": events_user_freq_cms,
     "events_audience_diff_kmv": events_audience_diff_kmv,
+    "events_bitmap_daily_users": events_bitmap_daily_users,
+    "events_dau_rollup_hll": events_dau_rollup_hll,
 }
 
 ORACLES = {
-    "events_user_freq_cms": CMS_USER_FREQ_SQL,
-    "events_audience_diff_kmv": AUDIENCE_DIFF_KMV_SQL,
-    "lineitem_distinct_profile_hll": DISTINCT_PROFILE_SQL,
-    "orders_bloom_prune": BLOOM_PRUNE_SQL,
-    "events_rolling_quantiles_hist": ROLLING_HIST_QUANTILES_SQL,
+    "events_rolling_dau_approx": HLL_ROLLING_DAU_SQL,
+    "heavy_hitter_terms": HEAVY_HITTERS_SQL,
     "events_value_quantiles_hist": HIST_QUANTILES_SQL,
     "events_audience_overlap_hll": AUDIENCE_OVERLAP_SQL,
+    "orders_bloom_prune": BLOOM_PRUNE_SQL,
+    "events_rolling_quantiles_hist": ROLLING_HIST_QUANTILES_SQL,
+    "lineitem_distinct_profile_hll": DISTINCT_PROFILE_SQL,
+    "events_user_freq_cms": CMS_USER_FREQ_SQL,
+    "events_audience_diff_kmv": AUDIENCE_DIFF_KMV_SQL,
+    "events_bitmap_daily_users": BITMAP_DAU_SQL,
+    "events_dau_rollup_hll": DAU_ROLLUP_HLL_SQL,
 }

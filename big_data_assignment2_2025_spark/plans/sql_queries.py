@@ -7,11 +7,15 @@ would be float-order-sensitive is expressed in exact integer cents so the
 shared text is also hash-identical.
 """
 
-from __future__ import annotations
+# NOTE: no `from __future__ import annotations` here — stringified
+# annotations would defeat pandas_udf's type-hint eval-type inference
+# (udaf_trimmed_mean), forcing the deprecated PandasUDFType enum instead.
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
+
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -149,6 +153,7 @@ SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes
 FROM best GROUP BY dist ORDER BY dist
 """
 
+
 _RECURSION_OVER_VIEW = """
 WITH RECURSIVE
 walk(node, dist) AS (
@@ -183,7 +188,6 @@ def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_RECURSION_OVER_VIEW)
 
 
-
 # One text, two engines: GROUP BY ALL (Spark 3.4+/DuckDB dialect sugar that
 # groups on every non-aggregate select item). Exact-integer cents keep the
 # SUM order-independent and hash-stable.
@@ -200,12 +204,130 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(SQL_GROUP_BY_ALL)
 
+
+# ---------------------------------------------------------------------------
+# Python DataSource API (Spark 4)
+# ---------------------------------------------------------------------------
+
+
+def python_datasource_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A table from a USER-DEFINED Python data source (Spark 4's
+    ``pyspark.sql.datasource`` API): a generated calendar dimension,
+    partitioned one-split-per-month so the read parallelizes like any other
+    source. Exercises the full custom-source contract — name/schema/reader/
+    partitions — the extension point for reading systems Spark has no
+    built-in connector for. The query rolls the dimension up per month;
+    the oracle regenerates the same calendar with generate_series."""
+    from ..sources.pyds import CalendarDataSource
+
+    spark.dataSource.register(CalendarDataSource)
+    cal = spark.read.format("calendar").option("year", "1995").load()
+    return (
+        cal.groupBy("month")
+        .agg(
+            F.count("*").alias("n_days"),
+            F.sum(F.col("is_weekend").cast("long")).alias("n_weekend"),
+            F.min("day").alias("first_day"),
+        )
+        .orderBy("month")
+    )
+
+
+PY_DATASOURCE_SQL = """
+WITH cal AS (
+  SELECT CAST(d AS DATE) AS day,
+         month(CAST(d AS DATE)) AS month,
+         isodow(CAST(d AS DATE)) >= 6 AS is_weekend
+  FROM generate_series(DATE '1995-01-01', DATE '1995-12-31', INTERVAL 1 DAY)
+       gs(d))
+SELECT CAST(month AS INTEGER) AS month,
+       CAST(COUNT(*) AS BIGINT) AS n_days,
+       CAST(SUM(CAST(is_weekend AS BIGINT)) AS BIGINT) AS n_weekend,
+       MIN(day) AS first_day
+FROM cal GROUP BY month ORDER BY month
+"""
+
+
+def udaf_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pandas UDAF surface (``pandas_udf`` GROUPED_AGG): a per-event-type
+    10%-trimmed mean — the robust-location aggregate built-ins don't ship.
+    The UDF receives each group's values as ONE Arrow-backed numpy array
+    (vectorized; PythonUDAF in the plan, never row-at-a-time), and all
+    arithmetic is integer cents with a single floor division, so the result
+    is bit-exact across engines and partitionings. Python's ``//`` floors;
+    the oracle mirrors it with ``floor(sum/cnt)`` in double (the sum is
+    far below 2^53, so the double division is exact) — robust even if a
+    regenerated fixture ships negative values, where DuckDB's integer
+    ``//`` (truncating) would diverge.
+
+    Scale note: GROUPED_AGG materializes each group's values in executor
+    memory — fine for bounded groups (event types); for unbounded groups
+    the rank-filtered SQL form (the oracle's shape) is the scale path.
+    This query pins the API surface, like udtf_top_terms.
+
+    Single pass: Spark disallows mixing a GROUPED_AGG pandas UDF with
+    native aggregates in one ``agg()``, but multiple GROUPED_AGG UDFs
+    compose — so the group count rides along as a second vectorized UDAF
+    over the same Arrow batch (one shuffle, no join-back). Eval type is
+    inferred from the ``pd.Series -> int`` hints (the non-deprecated
+    Spark 3/4 API); this module deliberately has no
+    ``from __future__ import annotations``."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _trimmed(cents: pd.Series) -> int:
+        v = cents.sort_values().to_numpy()
+        k = len(v) // 10
+        kept = v[k : len(v) - k] if len(v) > 2 * k else v
+        return int(kept.sum()) // len(kept)
+
+    def _size(cents: pd.Series) -> int:
+        return len(cents)
+
+    trimmed_mean_cents = pandas_udf(_trimmed, "long")
+    group_size = pandas_udf(_size, "long")
+
+    ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    cents = ev.select(
+        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+    )
+    return (
+        cents.groupBy("event_type")
+        .agg(
+            group_size("cents").alias("n_events"),
+            trimmed_mean_cents("cents").alias("trimmed_mean_cents"),
+        )
+        .orderBy("event_type")
+    )
+
+
+UDAF_TRIMMED_MEAN_SQL = """
+WITH c AS (
+  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
+  FROM events WHERE value IS NOT NULL),
+r AS (
+  SELECT event_type, cents,
+         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY cents) AS rn,
+         COUNT(*) OVER (PARTITION BY event_type) AS n
+  FROM c)
+SELECT event_type,
+       CAST(MAX(n) AS BIGINT) AS n_events,
+       CAST(floor(CAST(SUM(CASE WHEN rn > n // 10 AND rn <= n - n // 10
+                             THEN cents END) AS DOUBLE)
+                  / (MAX(n) - 2 * (MAX(n) // 10))) AS BIGINT)
+         AS trimmed_mean_cents
+FROM r GROUP BY event_type ORDER BY event_type
+"""
+
+
 QUERIES = {
     "sql_group_by_all": sql_group_by_all,
     "sql_region_rollup": sql_region_rollup,
     "sql_lateral_topk": sql_lateral_topk,
     "udtf_top_terms": udtf_top_terms,
     "sql_recursive_reachability": sql_recursive_reachability,
+    "python_datasource_calendar": python_datasource_calendar,
+    "udaf_trimmed_mean": udaf_trimmed_mean,
 }
 
 ORACLES = {
@@ -214,4 +336,6 @@ ORACLES = {
     "sql_lateral_topk": SQL_LATERAL_TOPK,
     "udtf_top_terms": UDTF_TOP_TERMS_SQL,
     "sql_recursive_reachability": SQL_RECURSIVE_REACHABILITY,
+    "python_datasource_calendar": PY_DATASOURCE_SQL,
+    "udaf_trimmed_mean": UDAF_TRIMMED_MEAN_SQL,
 }

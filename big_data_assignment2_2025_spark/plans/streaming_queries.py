@@ -30,24 +30,29 @@ from ..streaming import (
     run_streaming_rolling_dau,
     run_streaming_rolling_dau_hll,
     run_streaming_sessions,
-    run_streaming_value_quantiles,
     run_streaming_sliding_window,
     run_streaming_stateful_counter,
     run_streaming_static_join,
     run_streaming_stream_join,
     run_streaming_stream_join_left,
     run_streaming_user_freq_cms,
+    run_streaming_value_quantiles,
 )
 from .events_queries import (
     EVENTS_HOURLY_SQL,
     EVENTS_LATEST_STATE_SQL,
+    EVENTS_PATTERN_MATCH_SQL,
     EVENTS_SLIDING_SQL,
+    OHLC_SQL,
+    ROLLING_DAU_SQL,
 )
-from .round5_queries import HLL_ROLLING_DAU_SQL, OHLC_SQL, ROLLING_DAU_SQL
-from .round7g_queries import EWMA_ANOMALY_SQL
-from .round7_queries import DAILY_CMS_SQL, DAILY_HIST_QUANTILES_SQL
-from .round7b_queries import BITMAP_DAU_SQL
-from .round7f_queries import EVENTS_PATTERN_MATCH_SQL
+from .sketch_queries import (
+    BITMAP_DAU_SQL,
+    DAILY_CMS_SQL,
+    DAILY_HIST_QUANTILES_SQL,
+    HLL_ROLLING_DAU_SQL,
+)
+from .temporal_queries import EWMA_ANOMALY_SQL
 
 
 def streaming_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,6 +229,7 @@ SELECT user_id, COUNT(*) AS n_events,
 FROM events GROUP BY user_id
 """
 
+
 STREAMING_DEDUP_SQL = """
 WITH dedup AS (
   SELECT event_id, MIN(event_type) AS event_type
@@ -231,6 +237,7 @@ WITH dedup AS (
 SELECT event_type, COUNT(*) AS n_unique
 FROM dedup GROUP BY event_type
 """
+
 
 # Dedup-aware twin of EVENTS_HOURLY_SQL: one representative row per
 # event_id (MIN of each field — exact-copy duplicates make MIN the value
@@ -247,6 +254,7 @@ SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_start,
        round(SUM(value), 4) AS sum_value
 FROM dedup GROUP BY 1, 2
 """
+
 
 STREAMING_SESSIONS_SQL = """
 WITH e AS (
@@ -383,29 +391,25 @@ QUERIES = {
 }
 
 ORACLES = {
-    # identical final state to the batch log-compaction aggregation
-    "streaming_latest_state": EVENTS_LATEST_STATE_SQL,
-    # identical final state to the batch user-day pattern match
-    "streaming_pattern_match": EVENTS_PATTERN_MATCH_SQL,
     "streaming_foreachbatch_upsert": STREAMING_FOREACHBATCH_SQL,
     # the store's content is batching-invariant: exactly-once txn commits
     "streaming_snapshot_sink": STREAMING_SNAPSHOT_SINK_SQL,
     # every committed row delivered exactly once, batching-invariant
     "streaming_snapshot_source": STREAMING_SNAPSHOT_SOURCE_SQL,
-    "streaming_stream_join": STREAMING_STREAM_JOIN_SQL,
-    "streaming_static_join": STREAMING_STATIC_JOIN_SQL,
-    # identical final state to the batch sliding-window aggregation
-    "streaming_sliding_window": EVENTS_SLIDING_SQL,
     # identical final state to the batch tumbling-window aggregation
     "streaming_hourly_window": EVENTS_HOURLY_SQL,
-    # identical final state to the batch argmin/argmax OHLC aggregation
-    "streaming_ohlc_bars": OHLC_SQL,
     "streaming_dedup_events": STREAMING_DEDUP_SQL,
     # dedup collapses the duplicated replay to one row per event_id, so the
     # final state equals the dedup-aware batch hourly aggregation
     "streaming_dedup_window_chain": STREAM_DEDUP_CHAIN_SQL,
     "streaming_session_windows": STREAMING_SESSIONS_SQL,
     "streaming_stateful_counter": STREAMING_STATEFUL_SQL,
+    "streaming_stream_join": STREAMING_STREAM_JOIN_SQL,
+    "streaming_static_join": STREAMING_STATIC_JOIN_SQL,
+    # identical final state to the batch sliding-window aggregation
+    "streaming_sliding_window": EVENTS_SLIDING_SQL,
+    # identical final state to the batch argmin/argmax OHLC aggregation
+    "streaming_ohlc_bars": OHLC_SQL,
     # chained dropDuplicates -> exact-distinct aggregation: final state
     # equals the batch rolling-DAU query (same oracle)
     "streaming_rolling_dau": ROLLING_DAU_SQL,
@@ -424,6 +428,10 @@ ORACLES = {
     # bitmap aggregate exactly — one SQL serves both deployments
     "streaming_bitmap_dau": BITMAP_DAU_SQL,
     "streaming_stream_join_left": STREAMING_STREAM_JOIN_LEFT_SQL,
+    # identical final state to the batch log-compaction aggregation
+    "streaming_latest_state": EVENTS_LATEST_STATE_SQL,
+    # identical final state to the batch user-day pattern match
+    "streaming_pattern_match": EVENTS_PATTERN_MATCH_SQL,
     # daily sums reconcile exactly (monotone row count picks the final
     # emission) and the scoring IS the batch code — one SQL serves both
     "streaming_ewma_anomaly": EWMA_ANOMALY_SQL,

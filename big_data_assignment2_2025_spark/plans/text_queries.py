@@ -8,11 +8,38 @@ the ASCII token pattern ``[a-z0-9_']+`` — semantically identical here to the
 Spark side's Unicode pattern (golden-tested separately for Unicode parity in
 tests/test_tokenizer.py). Double arithmetic keeps a fixed operation order on
 both sides and rounds to 6 decimals before comparison.
+
+Per-language top terms (``top_terms_per_lang``) combine text × windows, and
+``doc_quality_quartiles`` generalizes the distributed-ranking operator
+beyond RFM; both rank windows are fully tie-broken.
+
+- **corpus divergence** (``corpus_divergence_kl``): per-language add-one
+  smoothed KL(A||B) contributions between two hash-split halves of the
+  corpus — the drift monitor run between a new training-mix snapshot and
+  the previous one.
+
+- **BPE pair counting** (``text_bpe_merge_pairs``): the inner loop of
+  byte-pair-encoding tokenizer training — count adjacent symbol pairs over
+  the WORD-FREQUENCY table (not the raw corpus: BPE's classic optimization,
+  the pair scan is over distinct words weighted by their corpus frequency,
+  shrinking the explode by the corpus/vocabulary ratio). This is merge
+  round 1 over character symbols; iterating = re-running with the winning
+  pair fused, each round the same bounded shape. Top-20 pairs with a total
+  (freq DESC, pair ASC) order keeps both engines deterministic at the
+  cut.
+
+- **collocation mining** (``text_collocations_llr``): Dunning
+  log-likelihood-ratio scoring of the corpus's most frequent bigrams —
+  the statistically-sound phrase detector (raw counts over-rank "of the";
+  LLR ranks by association strength). Candidates are the bounded top-100
+  bigrams by count, so the 4-ln scoring chain runs on a fixed cell set
+  (the segment-PMI discipline), micro-rounded on both engines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -20,9 +47,12 @@ from ..functions.text import (
     doc_fingerprint,
     language_id,
     quality_score,
+    tokenize,
     whitespace_token_count,
 )
+from ..operators.ranking import NtileSpec, with_global_ntiles
 from ..sources.readers import load_table
+
 
 _TOKS_CTE = """
 t AS (SELECT doc_id, lang, source, n_chars,
@@ -431,6 +461,538 @@ ORDER BY doc_id
 """
 
 
+# ---------------------------------------------------------------------------
+# Positional explode (ordinality)
+# ---------------------------------------------------------------------------
+
+
+def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token stream WITH ORDINALITY: posexplode attaches each token's
+    1-based position — the operator behind positional n-gram features and
+    span labeling (plain explode, as used by the index builder, forgets
+    order). Zero shuffles: generator + projection pipelined in one stage."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0)
+    toks = docs.select("doc_id", tokenize("text").alias("toks"))
+    return toks.select(
+        "doc_id", F.posexplode("toks").alias("pos", "term")
+    ).withColumn("pos", (F.col("pos") + 1).cast("long"))
+
+
+POSEXPLODE_SQL = """
+WITH t AS (
+  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9_'']+') AS toks
+  FROM documents WHERE doc_id % 20 = 0)
+SELECT doc_id,
+       unnest(range(1, len(toks) + 1)) AS pos,
+       unnest(toks) AS term
+FROM t
+"""
+
+
+def top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 terms by document frequency per language (ties broken
+    alphabetically) — the vocabulary census a corpus pipeline runs per
+    stratum. Tokenize → per-(lang, term) distinct-doc counts → rank window
+    over the aggregated (small) relation. The window rides the aggregate,
+    never the token stream."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "lang", "doc_id", F.explode(tokenize("text")).alias("term")
+    ).distinct()
+    df_by_lang = toks.groupBy("lang", "term").agg(
+        F.count("*").alias("n_docs")
+    )
+    w = W.partitionBy("lang").orderBy(F.desc("n_docs"), "term")
+    return (
+        df_by_lang.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 5)
+        .select("lang", "rnk", "term", "n_docs")
+    )
+
+
+TOP_TERMS_SQL = """
+WITH toks AS (
+  SELECT DISTINCT lang, doc_id,
+         unnest(regexp_extract_all(lower(text), '[a-z0-9_'']+')) AS term
+  FROM documents),
+df AS (
+  SELECT lang, term, COUNT(*) AS n_docs FROM toks GROUP BY lang, term),
+ranked AS (
+  SELECT lang, term, n_docs,
+         row_number() OVER (PARTITION BY lang
+                            ORDER BY n_docs DESC, term) AS rnk
+  FROM df)
+SELECT lang, CAST(rnk AS BIGINT) AS rnk, term, CAST(n_docs AS BIGINT) AS n_docs
+FROM ranked WHERE rnk <= 5
+"""
+
+
+# per-document quality in [0,1], identical to TEXT_QUALITY_SQL's formula
+# (text_queries.py) — fixed operation order keeps it bit-equal cross-engine
+_QUALITY_CTE = """
+t AS (SELECT doc_id, lang, source,
+             regexp_extract_all(lower(text), '[a-z0-9_'']+') AS toks, text
+      FROM documents WHERE text IS NOT NULL),
+m AS (
+  SELECT doc_id, lang, source, text,
+         round(
+           (CASE WHEN CAST(length(text) AS DOUBLE) >= 100
+                  AND CAST(length(text) AS DOUBLE) <= 20000 THEN 1.0
+                 WHEN length(text) > 0 THEN 0.5 ELSE 0.0 END) * 0.4
+           + (CASE WHEN length(text) > 0
+                   THEN CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
+                        / CAST(length(text) AS DOUBLE)
+                   ELSE 0.0 END) * 0.3
+           + (CASE WHEN len(toks) > 0
+                   THEN LEAST(1.0, CAST(len(list_filter(toks,
+                        x -> x IN ('the','and','of','to','is','a','in'))) AS DOUBLE)
+                        * 10.0 / CAST(len(toks) AS DOUBLE))
+                   ELSE 0.0 END) * 0.3,
+           6) AS quality
+  FROM t)
+"""
+
+
+def doc_quality_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-quartile corpus quality profile: documents cut into 4 positional
+    quality quartiles (best = 1), then per-quartile doc counts and quality
+    bounds — the readout that decides curriculum/sampling weights.
+
+    Exercises ``operators.ranking.with_global_ntiles`` on a DOUBLE metric:
+    the ascending long key is the negated micro-unit quality (quality is
+    rounded to 6 decimals, so ``round(q*1e6)`` is an exact integer and the
+    key is strictly monotone with the quality order). No unpartitioned
+    window; the oracle uses plain NTILE."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    scored = docs.select(
+        "doc_id", F.round(quality_score("text"), 6).alias("quality")
+    )
+    tiled = with_global_ntiles(
+        scored,
+        [
+            # quality clusters on the formula's band steps -> composite
+            # boundaries keep buckets balanced under heavy ties
+            NtileSpec(
+                "quartile",
+                -F.round(F.col("quality") * 1e6),
+                [F.col("quality").desc(), F.col("doc_id").asc()],
+                sub_key=F.col("doc_id"),
+            )
+        ],
+        n_tiles=4,
+    )
+    return (
+        tiled.groupBy("quartile")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.min("quality").alias("min_quality"),
+            F.max("quality").alias("max_quality"),
+        )
+        .orderBy("quartile")
+    )
+
+
+DOC_QUALITY_QUARTILES_SQL = f"""
+WITH {_QUALITY_CTE},
+d AS (
+  SELECT doc_id, quality,
+         NTILE(4) OVER (ORDER BY quality DESC, doc_id ASC) AS quartile
+  FROM m)
+SELECT CAST(quartile AS INTEGER) AS quartile,
+       COUNT(*) AS n_docs,
+       MIN(quality) AS min_quality,
+       MAX(quality) AS max_quality
+FROM d GROUP BY quartile ORDER BY quartile
+"""
+
+
+def doc_boilerplate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-document LINE duplication per document — the boilerplate
+    contamination metric corpus prep pipelines filter on (a page whose
+    sentences mostly appear verbatim elsewhere is navigation/template, not
+    content). Sentences = '. '-separated segments longer than 20 chars;
+    a sentence is boilerplate if its exact text occurs in more than one
+    DOCUMENT.
+
+    Shape: explode to (doc, sentence) -> md5 the sentence AT EXPLODE TIME
+    (inside the same scan-side projection, before any exchange) ->
+    distinct -> document-frequency agg -> join back, ALL keyed on the
+    32-hex digest. The raw sentence string never crosses a shuffle: every
+    exchange row is (doc_id, 32-char digest), fixed-width regardless of
+    sentence length — the same digest-key discipline as exact dedup
+    (operators/dedup.py). Collisions are a non-issue at any corpus size
+    (2^64 birthday bound on 128-bit md5). Output: per-doc sentence counts,
+    duplicated-sentence count, and the boilerplate rate (exact integer
+    division, rounded once)."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    sent = (
+        docs.select(
+            "doc_id", F.explode(F.split("text", r"\. ")).alias("sentence")
+        )
+        .where(F.length("sentence") > 20)
+        .select("doc_id", F.md5("sentence").alias("sent_digest"))
+        .distinct()
+    )
+    freq = sent.groupBy("sent_digest").agg(F.count("*").alias("n_docs_with"))
+    per_doc = (
+        sent.join(freq, "sent_digest")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_sentences"),
+            F.sum(F.when(F.col("n_docs_with") > 1, 1).otherwise(0)).alias(
+                "n_boilerplate"
+            ),
+        )
+    )
+    return per_doc.select(
+        "doc_id",
+        "n_sentences",
+        "n_boilerplate",
+        F.round(
+            F.col("n_boilerplate").cast("double") / F.col("n_sentences"), 6
+        ).alias("boilerplate_rate"),
+    )
+
+
+DOC_BOILERPLATE_SQL = """
+WITH sent AS (
+  SELECT DISTINCT doc_id, s AS sentence
+  FROM (SELECT doc_id, unnest(string_split(text, '. ')) AS s
+        FROM documents WHERE text IS NOT NULL)
+  WHERE length(s) > 20),
+freq AS (SELECT sentence, COUNT(*) AS n_docs_with FROM sent GROUP BY sentence)
+SELECT doc_id,
+       COUNT(*) AS n_sentences,
+       CAST(SUM(CASE WHEN n_docs_with > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_boilerplate,
+       round(CAST(SUM(CASE WHEN n_docs_with > 1 THEN 1 ELSE 0 END) AS DOUBLE)
+             / COUNT(*), 6) AS boilerplate_rate
+FROM sent JOIN freq USING (sentence)
+GROUP BY doc_id
+"""
+
+
+def corpus_divergence_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-distribution drift between two hash-split halves of the
+    corpus: per-language add-one smoothed probabilities and the KL(A||B)
+    contribution term. All heavy work is one groupBy over (lang); the
+    totals + vocabulary size are a 1-row broadcast scalar. Probabilities
+    are rounded to 6 decimals BEFORE the log term so both engines compute
+    the ratio from identical inputs."""
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    split = (F.col("doc_id") % 2 == 0).cast("long")
+    by_lang = docs.groupBy("lang").agg(
+        F.sum(split).alias("n_a"),
+        F.sum(1 - split).alias("n_b"),
+    )
+    totals = by_lang.agg(
+        F.sum("n_a").alias("tot_a"),
+        F.sum("n_b").alias("tot_b"),
+        F.count("*").alias("n_langs"),
+    )
+    j = by_lang.join(F.broadcast(totals))
+    p_a = F.round((F.col("n_a") + 1) / (F.col("tot_a") + F.col("n_langs")), 6)
+    p_b = F.round((F.col("n_b") + 1) / (F.col("tot_b") + F.col("n_langs")), 6)
+    return j.select(
+        "lang",
+        "n_a",
+        "n_b",
+        p_a.alias("p_a"),
+        p_b.alias("p_b"),
+        F.round(p_a * F.log(p_a / p_b), 6).alias("kl_term"),
+    )
+
+
+DIVERGENCE_SQL = """
+WITH by_lang AS (
+  SELECT lang,
+         SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
+         SUM(CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END) AS n_b
+  FROM documents WHERE text IS NOT NULL
+  GROUP BY lang
+),
+tot AS (
+  SELECT SUM(n_a) AS tot_a, SUM(n_b) AS tot_b, COUNT(*) AS n_langs
+  FROM by_lang
+)
+SELECT lang,
+       CAST(n_a AS BIGINT) AS n_a,
+       CAST(n_b AS BIGINT) AS n_b,
+       round((n_a + 1) / CAST(tot_a + n_langs AS DOUBLE), 6) AS p_a,
+       round((n_b + 1) / CAST(tot_b + n_langs AS DOUBLE), 6) AS p_b,
+       round(round((n_a + 1) / CAST(tot_a + n_langs AS DOUBLE), 6)
+             * ln(round((n_a + 1) / CAST(tot_a + n_langs AS DOUBLE), 6)
+                  / round((n_b + 1) / CAST(tot_b + n_langs AS DOUBLE), 6)), 6)
+         AS kl_term
+FROM by_lang, tot
+"""
+
+
+# --------------------------------------------------------------------------
+# BPE pair counting (tokenizer-training merge round)
+# --------------------------------------------------------------------------
+
+
+def text_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 adjacent character pairs over the corpus word-frequency
+    table — BPE merge round 1.
+
+    Pipeline: tokenize (the index's own tokenizer) → word-frequency
+    aggregate (the ONLY corpus-sized shuffle; its output is the distinct
+    vocabulary, orders of magnitude smaller) → per-word adjacent-pair
+    explode (bounded ×(len-1) fan-out of the vocabulary, a projection) →
+    weighted pair counts. Iterating BPE re-runs the pair scan with the
+    winning pair fused into one symbol; every round keeps this shape, so
+    the 100 TB cost is one corpus tokenize + per-round vocabulary-sized
+    work."""
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("text").isNotNull()
+    )
+    toks = docs.select(F.explode(tokenize(F.col("text"))).alias("w"))
+    wf = (
+        toks.groupBy("w")
+        .agg(F.count("*").alias("f"))
+        .where(F.length("w") >= 2)
+    )
+    pairs = wf.select(
+        F.explode(
+            F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
+        ).alias("pair"),
+        "f",
+    )
+    return (
+        pairs.groupBy("pair")
+        .agg(F.sum("f").cast("long").alias("freq"))
+        .orderBy(F.col("freq").desc(), F.col("pair").asc())
+        .limit(20)
+    )
+
+
+BPE_MERGE_PAIRS_SQL = """
+WITH toks AS (
+  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9_'']+')) AS w
+  FROM documents WHERE text IS NOT NULL
+),
+wf AS (
+  SELECT w, count(*) AS f FROM toks GROUP BY w
+),
+pairs AS (
+  SELECT substring(w, CAST(i AS INTEGER), 2) AS pair, f
+  FROM wf, UNNEST(range(1, length(w))) AS t(i)
+  WHERE length(w) >= 2
+)
+SELECT pair, CAST(sum(f) AS BIGINT) AS freq
+FROM pairs GROUP BY pair
+ORDER BY freq DESC, pair ASC
+LIMIT 20
+"""
+
+
+# --------------------------------------------------------------------------
+# Language-ID confusion matrix (declared vs detected)
+# --------------------------------------------------------------------------
+
+
+def docs_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Confusion matrix of the fixture's DECLARED language column against
+    the stopword-argmax detector — the calibration readout that tells a
+    corpus pipeline whether its cheap language filter can be trusted per
+    language. One projection + one small groupBy; share is computed
+    against the declared-language total via a broadcast join of the
+    (≤ languages)-row totals frame."""
+    from ..functions.text import language_id
+
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("text").isNotNull()
+    )
+    guessed = docs.select("lang", language_id("text").alias("lang_guess"))
+    cells = guessed.groupBy("lang", "lang_guess").agg(
+        F.count("*").alias("n_docs")
+    )
+    totals = guessed.groupBy("lang").agg(F.count("*").alias("n_total"))
+    return (
+        cells.join(F.broadcast(totals), "lang")
+        .select(
+            "lang",
+            "lang_guess",
+            "n_docs",
+            F.round(F.col("n_docs") / F.col("n_total"), 6).alias("share"),
+        )
+        .orderBy("lang", "lang_guess")
+    )
+
+
+LANGID_CONFUSION_SQL = """
+WITH t AS (
+  SELECT lang,
+         regexp_extract_all(lower(text), '[a-z0-9_'']+') AS toks
+  FROM documents WHERE text IS NOT NULL
+),
+h AS (
+  SELECT lang,
+         len(list_filter(toks, x -> x IN ('the','and','of','to','is'))) AS en,
+         len(list_filter(toks, x -> x IN ('el','la','de','que','los'))) AS es,
+         len(list_filter(toks, x -> x IN ('der','die','und','das','ist'))) AS de,
+         len(list_filter(toks, x -> x IN ('le','la','et','les','des'))) AS fr
+  FROM t
+),
+g AS (
+  SELECT lang,
+         CASE WHEN GREATEST(en, es, de, fr) = 0 THEN 'und'
+              WHEN en = GREATEST(en, es, de, fr) THEN 'en'
+              WHEN es = GREATEST(en, es, de, fr) THEN 'es'
+              WHEN de = GREATEST(en, es, de, fr) THEN 'de'
+              ELSE 'fr' END AS lang_guess
+  FROM h
+),
+cells AS (
+  SELECT lang, lang_guess, count(*) AS n_docs FROM g GROUP BY 1, 2
+),
+totals AS (
+  SELECT lang, count(*) AS n_total FROM g GROUP BY 1
+)
+SELECT c.lang, c.lang_guess, c.n_docs,
+       round(c.n_docs / t.n_total, 6) AS share
+FROM cells c JOIN totals t USING (lang)
+ORDER BY c.lang, c.lang_guess
+"""
+
+
+# --------------------------------------------------------------------------
+# Collocations by log-likelihood ratio
+# --------------------------------------------------------------------------
+
+#: minimum bigram occurrences to be scored, and the bounded candidate count
+_LLR_MIN_COUNT = 5
+
+
+_LLR_TOP = 100
+
+
+def _llr_expr() -> str:
+    """Dunning LLR over the 2x2 contingency table, as ONE expression text
+    shared by both engines. Operands are the double columns k11 (bigram
+    count), n_l (bigrams starting with w1), n_r (bigrams ending with w2),
+    n_tot (all bigrams); each cell contributes k·ln(k/e) when k>0 with
+    e the independence expectation row·col/N."""
+
+    def term(k: str, row: str, col: str) -> str:
+        e = f"(({row}) * ({col}) / n_tot)"
+        return f"(CASE WHEN {k} > 0 THEN {k} * ln({k} / {e}) ELSE 0.0 END)"
+
+    k11 = "k11"
+    k12 = "(n_l - k11)"
+    k21 = "(n_r - k11)"
+    k22 = "(n_tot - n_l - n_r + k11)"
+    row1, row2 = "n_l", "(n_tot - n_l)"
+    col1, col2 = "n_r", "(n_tot - n_r)"
+    return (
+        "2.0 * ("
+        + " + ".join(
+            [
+                term(k11, row1, col1),
+                term(k12, row1, col2),
+                term(k21, row2, col1),
+                term(k22, row2, col2),
+            ]
+        )
+        + ")"
+    )
+
+
+def text_collocations_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-100 most frequent corpus bigrams rescored by Dunning
+    log-likelihood ratio — the association-strength ranking that
+    separates real collocations from merely-frequent function-word
+    pairs.
+
+    Scale: bigram/margin statistics are three hash aggregations over the
+    token stream (shuffle keys: bigram, first word, second word — all
+    Zipf-concentrated but exact); the 4-ln float chain runs only on the
+    bounded 100-candidate frame after a TakeOrderedAndProject, so the
+    frozen-IEEE surface is fixed-size however large the corpus grows
+    (the segment-PMI discipline)."""
+    from pyspark.sql import Window as W
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+    ).where(F.col("tok") != "")
+    by_doc = W.partitionBy("doc_id").orderBy("pos")
+    big = (
+        toks.withColumn("w2", F.lead("tok").over(by_doc))
+        .where(F.col("w2").isNotNull())
+        .select(F.col("tok").alias("w1"), "w2")
+        .persist()  # feeds the pair counts and both margins
+    )
+    bg = big.groupBy("w1", "w2").agg(F.count("*").alias("n_bg"))
+    left = big.groupBy("w1").agg(F.count("*").alias("n_left"))
+    right = big.groupBy("w2").agg(F.count("*").alias("n_right"))
+    total = big.agg(F.count("*").alias("n_total"))  # 1-row scalar
+    cand = (
+        bg.where(F.col("n_bg") >= _LLR_MIN_COUNT)
+        .orderBy(F.col("n_bg").desc(), F.col("w1").asc(), F.col("w2").asc())
+        .limit(_LLR_TOP)
+    )
+    scored = (
+        cand.join(F.broadcast(left), "w1")
+        .join(F.broadcast(right), "w2")
+        .crossJoin(F.broadcast(total))
+        .withColumn("k11", F.col("n_bg").cast("double"))
+        .withColumn("n_l", F.col("n_left").cast("double"))
+        .withColumn("n_r", F.col("n_right").cast("double"))
+        .withColumn("n_tot", F.col("n_total").cast("double"))
+        .select(
+            "w1",
+            "w2",
+            F.col("n_bg").cast("long").alias("n_bg"),
+            F.expr(
+                f"CAST(floor(({_llr_expr()}) * 1000000 + 0.5) AS BIGINT)"
+            ).alias("llr_micros"),
+        )
+    )
+    return scored.orderBy(
+        F.col("llr_micros").desc(), F.col("w1").asc(), F.col("w2").asc()
+    )
+
+
+COLLOCATIONS_SQL = f"""
+WITH raw AS (
+  SELECT doc_id,
+         unnest(string_split(text, ' ')) AS tok,
+         generate_subscripts(string_split(text, ' '), 1) AS pos
+  FROM documents),
+toks AS (SELECT doc_id, tok, pos FROM raw WHERE tok <> ''),
+big AS (
+  SELECT w1, w2 FROM (
+    SELECT tok AS w1,
+           LEAD(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+    FROM toks) t
+  WHERE w2 IS NOT NULL),
+bg AS (SELECT w1, w2, COUNT(*) AS n_bg FROM big GROUP BY w1, w2),
+lft AS (SELECT w1, COUNT(*) AS n_left FROM big GROUP BY w1),
+rgt AS (SELECT w2, COUNT(*) AS n_right FROM big GROUP BY w2),
+total AS (SELECT COUNT(*) AS n_total FROM big),
+cand AS (
+  SELECT w1, w2, n_bg FROM bg WHERE n_bg >= {_LLR_MIN_COUNT}
+  ORDER BY n_bg DESC, w1 ASC, w2 ASC LIMIT {_LLR_TOP}),
+scored AS (
+  SELECT cand.w1, cand.w2, CAST(cand.n_bg AS BIGINT) AS n_bg,
+         CAST(cand.n_bg AS DOUBLE) AS k11,
+         CAST(lft.n_left AS DOUBLE) AS n_l,
+         CAST(rgt.n_right AS DOUBLE) AS n_r,
+         CAST(total.n_total AS DOUBLE) AS n_tot
+  FROM cand
+  JOIN lft USING (w1)
+  JOIN rgt USING (w2)
+  CROSS JOIN total)
+SELECT w1, w2, n_bg,
+       CAST(floor(({_llr_expr()}) * 1000000 + 0.5) AS BIGINT) AS llr_micros
+FROM scored
+ORDER BY llr_micros DESC, w1 ASC, w2 ASC
+"""
+
+
 QUERIES = {
     "text_bigram_lm_score": text_bigram_lm_score,
     "split_train_test": split_train_test,
@@ -442,6 +1004,14 @@ QUERIES = {
     "text_token_counts": text_token_counts,
     "text_fingerprints": text_fingerprints,
     "text_corpus_stats": text_corpus_stats,
+    "posexplode_tokens": posexplode_tokens,
+    "top_terms_per_lang": top_terms_per_lang,
+    "doc_quality_quartiles": doc_quality_quartiles,
+    "doc_boilerplate_rate": doc_boilerplate_rate,
+    "corpus_divergence_kl": corpus_divergence_kl,
+    "text_bpe_merge_pairs": text_bpe_merge_pairs,
+    "docs_langid_confusion": docs_langid_confusion,
+    "text_collocations_llr": text_collocations_llr,
 }
 
 ORACLES = {
@@ -455,4 +1025,12 @@ ORACLES = {
     "text_token_counts": TEXT_TOKEN_COUNTS_SQL,
     "text_fingerprints": TEXT_FINGERPRINT_SQL,
     "text_corpus_stats": TEXT_CORPUS_STATS_SQL,
+    "posexplode_tokens": POSEXPLODE_SQL,
+    "top_terms_per_lang": TOP_TERMS_SQL,
+    "doc_quality_quartiles": DOC_QUALITY_QUARTILES_SQL,
+    "doc_boilerplate_rate": DOC_BOILERPLATE_SQL,
+    "corpus_divergence_kl": DIVERGENCE_SQL,
+    "text_bpe_merge_pairs": BPE_MERGE_PAIRS_SQL,
+    "docs_langid_confusion": LANGID_CONFUSION_SQL,
+    "text_collocations_llr": COLLOCATIONS_SQL,
 }

@@ -71,18 +71,13 @@ def pow2_bits(rows: int, bits_per_key: int) -> int:
     return m
 
 
-def probe_hashes(spark: SparkSession, value, dtype, k: int) -> list[int]:
-    """``[xxhash64(value, 0), ..., xxhash64(value, k-1)]`` computed by
-    the ENGINE itself on a 1-row frame — the only way to guarantee the
-    probe's hash matches the build's (same codepath, same type
-    coercion). O(1) metadata-plane job, like the constraint probes."""
-    return probe_hashes_many(spark, [value], dtype, k)[0]
-
-
 def probe_hashes_many(
     spark: SparkSession, values: list, dtype, k: int
 ) -> list[list[int]]:
-    """The k salted hashes for EVERY probe value in ONE job. A
+    """``[xxhash64(v, 0), ..., xxhash64(v, k-1)]`` for EVERY probe value
+    ``v``, computed by the ENGINE itself in ONE job — the only way to
+    guarantee the probe's hash matches the build's (same codepath, same
+    type coercion). O(1) metadata-plane job, like the constraint probes. A
     point-skip readout that probes a batch of keys (e.g. 16 absent
     probes + 1 present) previously paid one driver-round-trip job per
     key — the job overhead, not the hashing, was ~100 ms each

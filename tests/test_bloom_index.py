@@ -182,14 +182,14 @@ def test_deletion_vectors_keep_bloom_superset(spark, orders, hashed_store):
 def test_driver_probe_matches_engine_hash(spark):
     # the driver-side position math must agree with the Spark-side
     # build: round-trip a value through both paths
-    hashes = blooms.probe_hashes(spark, 424242, "bigint", 7)
+    hashes = blooms.probe_hashes_many(spark, [424242], "bigint", 7)[0]
     doc = {"m": 1 << 12, "k": 7, "words": {}}
     # build the words dict from the same hashes (driver-side insert)
     for pos in blooms.positions(hashes, 7, doc["m"]):
         w = doc["words"].get(str(pos >> 6), 0)
         doc["words"][str(pos >> 6)] = w | (1 << (pos & 63))
     assert blooms.might_contain(doc, hashes)
-    other = blooms.probe_hashes(spark, 424243, "bigint", 7)
+    other = blooms.probe_hashes_many(spark, [424243], "bigint", 7)[0]
     assert not blooms.might_contain(doc, other)
 
 

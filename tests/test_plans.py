@@ -158,3 +158,28 @@ def test_snapshot_diff_single_join(spark):
     ) >= 1
     assert "FullOuter" in plan
     assert "CartesianProduct" not in plan
+
+
+#: sha256 of the newline-joined sorted registry keys (316 queries)
+_REGISTRY_KEYS_SHA256 = (
+    "c1681b2b194f4a08cd2af7134456e11735536314b3268fc95f908e3f486f5686"
+)
+
+
+def test_registry_layout():
+    """Query modules are named by domain, and the registry neither drops
+    nor renames a query: the key set is pinned by count and hash."""
+    import hashlib
+    import pathlib
+    import re
+
+    from big_data_assignment2_2025_spark import plans
+    from big_data_assignment2_2025_spark.plans import ORACLES
+
+    stems = [p.stem for p in pathlib.Path(plans.__file__).parent.glob("*.py")]
+    bad = [s for s in stems if re.search(r"round\d", s) or s[-1].isdigit()]
+    assert not bad, bad
+    assert set(QUERIES) == set(ORACLES)
+    assert len(QUERIES) == 316
+    digest = hashlib.sha256("\n".join(sorted(QUERIES)).encode()).hexdigest()
+    assert digest == _REGISTRY_KEYS_SHA256

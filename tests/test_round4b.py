@@ -5,11 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round3_queries import graph_bfs_3hop
-from big_data_assignment2_2025_spark.plans.round4_queries import (
+from big_data_assignment2_2025_spark.plans.graph_queries import graph_bfs_3hop
+from big_data_assignment2_2025_spark.plans.pipeline_queries import (
     training_shuffle_shards,
-    udaf_trimmed_mean,
 )
+from big_data_assignment2_2025_spark.plans.sql_queries import udaf_trimmed_mean
 from big_data_assignment2_2025_spark.plans.sql_queries import (
     sql_recursive_reachability,
 )

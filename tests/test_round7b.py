@@ -13,16 +13,24 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7b_queries import (
-    _PHRASE,
-    embedding_int8_quantize,
-    events_bitmap_daily_users,
-    events_gap_fill_interpolate,
+from big_data_assignment2_2025_spark.plans.pipeline_queries import (
     ivm_orders_agg_refresh,
     orders_group_sample,
-    search_phrase_match,
     snapshot_diff_cdc,
+)
+from big_data_assignment2_2025_spark.plans.search_queries import (
+    _PHRASE,
+    search_phrase_match,
     search_rrf_fusion,
+)
+from big_data_assignment2_2025_spark.plans.similarity_queries import (
+    embedding_int8_quantize,
+)
+from big_data_assignment2_2025_spark.plans.sketch_queries import (
+    events_bitmap_daily_users,
+)
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
+    events_gap_fill_interpolate,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
 

@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7b_queries import (
+from big_data_assignment2_2025_spark.plans.sketch_queries import (
     bitmap_distinct_agg,
 )
 

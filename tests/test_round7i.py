@@ -17,20 +17,28 @@ from pyspark.sql import functions as F
 from big_data_assignment2_2025_spark.plans.graph_queries import (
     _copurchase_edges,
 )
-from big_data_assignment2_2025_spark.plans.round7g_queries import (
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
     events_ewma_anomaly,
 )
-from big_data_assignment2_2025_spark.plans.round7i_queries import (
-    _BENFORD_P,
+from big_data_assignment2_2025_spark.plans.graph_queries import (
+    _LPA_ROUNDS,
+    graph_label_propagation,
+)
+from big_data_assignment2_2025_spark.plans.pipeline_queries import (
     _DP_B,
     _DP_SEED,
     _L_DIVERSITY,
-    _LPA_ROUNDS,
     customer_l_diversity,
-    events_changepoint_cusum,
     events_dp_noisy_counts,
-    graph_label_propagation,
+)
+from big_data_assignment2_2025_spark.plans.relational import (
+    _BENFORD_P,
     orders_benford_audit,
+)
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
+    events_changepoint_cusum,
+)
+from big_data_assignment2_2025_spark.plans.text_queries import (
     text_collocations_llr,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table

@@ -14,15 +14,19 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from big_data_assignment2_2025_spark.plans.round7j_queries import (
+from big_data_assignment2_2025_spark.plans.events_queries import (
     _INTERVAL_US,
+    events_interval_merge,
+    events_markov_transitions,
+)
+from big_data_assignment2_2025_spark.plans.pipeline_queries import (
+    orders_scd2_history,
+)
+from big_data_assignment2_2025_spark.plans.temporal_queries import (
     _MAD_K10K,
     events_acf_daily,
-    events_interval_merge,
     events_mad_anomaly,
-    events_markov_transitions,
     events_twap_daily,
-    orders_scd2_history,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table
 

@@ -16,11 +16,13 @@ from pyspark.sql import functions as F
 from big_data_assignment2_2025_spark.plans.graph_queries import (
     _copurchase_edges,
 )
-from big_data_assignment2_2025_spark.plans.round7i_queries import (
+from big_data_assignment2_2025_spark.plans.graph_queries import (
     graph_label_propagation,
 )
-from big_data_assignment2_2025_spark.plans.round7k_queries import (
+from big_data_assignment2_2025_spark.plans.events_queries import (
     events_survival_km,
+)
+from big_data_assignment2_2025_spark.plans.graph_queries import (
     graph_modularity,
 )
 from big_data_assignment2_2025_spark.sources.readers import load_table

@@ -8,7 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_assignment2_2025_spark.functions.text import tokens_of
-from big_data_assignment2_2025_spark.plans.round9_queries import (
+from big_data_assignment2_2025_spark.plans.search_queries import (
     _DELETES2_SQL,
     _TYPO2_QUERIES,
     search_spell_suggest_d2,
